@@ -44,7 +44,8 @@ POSTINGS_TERM_BUCKETS = 64
 # reduce-side exchange-first aggregation (memory bounded by shuffle
 # partitioning).  24M tokens ~= 2M turns at the synthetic token law;
 # per-task map-side state there is ~2-3 GiB across local[32], well
-# inside the 32g heap, while an 8x (4M-turn, ~48M-token) build OOMs
-# without the switch.  On a real cluster size this to executor memory:
+# inside the 32g heap get_spark gives local[32] on a 32-core, 128 GiB
+# host, while an 8x (4M-turn, ~48M-token) build OOMs without the
+# switch.  On a real cluster size this to executor memory:
 # budget ~= executors x per-executor-heap-share / ~100 B-per-posting.
 REDUCE_SIDE_AGG_TOKENS = 24_000_000

@@ -3,8 +3,48 @@
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# local, local[N], local[*], local[N,F] / local[*,F] (F = task retries).
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)\s*(?:,\s*\d+)?\])?")
+_MIB = 1 << 20
+
+
+def physical_memory_bytes() -> int | None:
+    """Physical RAM of this host, or None where sysconf cannot say."""
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def driver_memory(
+    master: str, cpus: int, phys_bytes: int | None, override: str | None = None
+) -> str:
+    """Default ``spark.driver.memory``: 1 GiB per local worker thread,
+    never more than half of ``phys_bytes``.
+
+    Threads come from ``master``: ``local`` is 1, ``local[N]`` is N,
+    ``local[*]`` is ``cpus``.  A non-local master (``spark://``, ``yarn``,
+    ``k8s://``, ``local-cluster[...]``) gets the ``local[*]`` value, 1 GiB
+    per core of this host, under the same cap: the driver still collects
+    results and runs the driver-side traversals there.  ``override``
+    (``SPARK_GRAFT_DRIVER_MEM``) wins when set.  On a 32-core, 128 GiB
+    host ``local[32]`` gives 32g; ``local[4]`` on 16 GiB gives 4g.
+    """
+    if override:
+        return override
+    m = _LOCAL_MASTER.fullmatch(master.strip())
+    if m is None or m.group(1) == "*":
+        threads = cpus
+    else:
+        threads = int(m.group(1) or 1)
+    mib = threads * 1024
+    if phys_bytes:
+        mib = min(mib, phys_bytes // 2 // _MIB)
+    return f"{mib // 1024}g" if mib % 1024 == 0 else f"{mib}m"
 
 
 def get_spark(
@@ -32,6 +72,10 @@ def get_spark(
       dirs stay on disk rather than tmpfs: RAM-backed shuffle files
       wake khugepaged/compaction the same way.  Overridable via the
       standard ARROW_DEFAULT_MEMORY_POOL / SPARK_GRAFT_LOCAL_DIR envs.
+    - driver heap from ``driver_memory``: 1 GiB per local worker
+      thread, at most half of physical memory; a non-local master gets
+      1 GiB per core of this host under the same cap.
+      SPARK_GRAFT_DRIVER_MEM overrides it.
     """
     cpus = os.cpu_count() or 4
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
@@ -51,14 +95,23 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # 32g on the 128 GiB sandbox = 1 GiB per local[32] worker
-        # thread — still lean vs the 2-4 GiB/core a real cluster
-        # executor gets.  The previous 12g (375 MiB/thread) OOM'd the
-        # 8x data-axis build (4M turns): stage caches + reduce-side
+        # 1 GiB per local worker thread (32g for local[32] on a 128 GiB
+        # host) — still lean vs the 2-4 GiB/core a real cluster
+        # executor gets.  A flat 12g (375 MiB/thread at local[32]) OOM'd
+        # the 8x data-axis build (4M turns): stage caches + reduce-side
         # collect buffers are sized per task, and task memory must
         # scale with per-core share, not stay flat while parallelism
-        # grows.  Overridable via SPARK_GRAFT_DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # grows.  Capped at half of physical memory: a flat 32g on a
+        # 16 GB host let the JVM grow past RAM until the kernel killed it.
+        .config(
+            "spark.driver.memory",
+            driver_memory(
+                master,
+                cpus,
+                physical_memory_bytes(),
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM"),
+            ),
+        )
         .config("spark.ui.enabled", "false")
         # No console progress bars: the bench/driver artifacts capture a
         # bounded output tail, and the \r-escape progress spam can push

@@ -26,11 +26,11 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _submit(args: list[str], cwd: str) -> subprocess.CompletedProcess:
+def _submit(args: list[str], cwd: str, zip_path: str) -> subprocess.CompletedProcess:
     cmd = [
         SPARK_SUBMIT,
         "--master", "local[4]",
-        "--py-files", f"{REPO}/dist/mircv_project_spark.zip",
+        "--py-files", zip_path,
         "--conf", "spark.sql.shuffle.partitions=8",
         "--conf", "spark.ui.enabled=false",
     ] + args
@@ -38,11 +38,14 @@ def _submit(args: list[str], cwd: str) -> subprocess.CompletedProcess:
 
 
 def test_spark_submit_py_files_build_then_query(tmp_path):
+    # Package into tmp_path so the run leaves the tracked dist/ zip alone.
+    zip_path = str(tmp_path / "mircv_project_spark.zip")
     pkg = subprocess.run(
-        ["sh", f"{REPO}/scripts/package.sh"],
+        ["sh", f"{REPO}/scripts/package.sh", zip_path],
         capture_output=True, text=True, timeout=120,
     )
     assert pkg.returncode == 0, pkg.stderr
+    assert pkg.stdout.strip() == zip_path
 
     bin_dir = tmp_path / "bin"
     bin_dir.mkdir()
@@ -53,7 +56,7 @@ def test_spark_submit_py_files_build_then_query(tmp_path):
     r = _submit(
         [str(bin_dir / "build_index.py"),
          "--input", "generate:2000", "--output", idx],
-        cwd=str(tmp_path),
+        cwd=str(tmp_path), zip_path=zip_path,
     )
     assert r.returncode == 0, r.stderr[-4000:]
     stats = None
@@ -70,7 +73,7 @@ def test_spark_submit_py_files_build_then_query(tmp_path):
     r2 = _submit(
         [str(bin_dir / "query.py"),
          "--index", idx, "--query", "spark window join", "-k", "5"],
-        cwd=str(tmp_path),
+        cwd=str(tmp_path), zip_path=zip_path,
     )
     assert r2.returncode == 0, r2.stderr[-4000:]
     trec = [ln.split() for ln in r2.stdout.splitlines() if " Q0 " in ln]
