@@ -549,6 +549,15 @@ def main() -> None:
     from mircv_project_spark.operators.maxscore import maxscore_topk_df
     from mircv_project_spark.streaming import incremental as _S
 
+    def drain(what: str) -> None:
+        # awaitTermination(timeout) returns False when the micro-batch is
+        # still running: a drain that never finished must not be timed
+        # as freshness
+        if not _S.index_delta_query(
+            spark, n_inp, n_delta, n_ckpt, parse=True
+        ).awaitTermination(600):
+            raise RuntimeError(f"NRT {what} drain did not finish within 600 s")
+
     nrt_base = tempfile.mkdtemp(prefix="mircv_bench_nrt_")
     try:
         n_inp, n_delta, n_ckpt = (
@@ -566,17 +575,13 @@ def main() -> None:
         t.where(_F.col("conv_id") < cut).select(nrt_cols).coalesce(1).write.mode(
             "overwrite"
         ).parquet(n_inp)
-        _S.index_delta_query(
-            spark, n_inp, n_delta, n_ckpt, parse=True
-        ).awaitTermination(600)
+        drain("base")
         _S.compact_index(spark, n_delta, parse=True)
         fresh = t.where(_F.col("conv_id") >= cut).select(nrt_cols)
         n_fresh = fresh.count()
         t0 = time.monotonic()
         fresh.coalesce(1).write.mode("append").parquet(n_inp)
-        _S.index_delta_query(
-            spark, n_inp, n_delta, n_ckpt, parse=True
-        ).awaitTermination(600)
+        drain("fresh")
         nrt_idx = _S.nrt_index(spark, n_delta, parse=True)
         nrt_reader = IndexReader.from_memory(nrt_idx)
         maxscore_topk_df(nrt_reader, qset, scoring.BM25, k=10).collect()

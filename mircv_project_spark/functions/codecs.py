@@ -501,9 +501,7 @@ def encode_posting_blocks(docids, tfs, dls, codec: str = VB) -> list[dict]:
         gaps = np.empty(e - s, dtype=np.uint64)
         gaps[0] = bids[0]  # first id absolute -> block independently decodable
         gaps[1:] = bids[1:] - bids[:-1]
-        if codec == VB:
-            id_bytes = vb_encode(gaps)
-        elif codec == GAMMA:
+        if codec == GAMMA:
             id_bytes = gamma_encode(gaps)  # gaps >= 1 (ids strictly increasing)
         elif codec == EF:
             # reference codec: absolute ids, u = block max (block-local

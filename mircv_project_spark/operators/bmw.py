@@ -9,7 +9,8 @@ indexes", SIGIR 2011), which the reference does not have but whose
 block-max metadata its BlockDescriptor skip pointers
 (``model/BlockDescriptor.java:70-76``) already anticipate.
 
-Two pruning levels per pivot candidate d:
+Block-Max WAND is operators/wand.py's pivot loop plus a block-max
+``skip`` hook.  Two pruning levels per pivot candidate d:
 
 1. WAND pivot over GLOBAL term upper bounds (the lexicon's
    bm25_ub/tfidf_ub — ``model/LexiconEntry.java:40-42``): sort cursors
@@ -22,7 +23,8 @@ Two pruning levels per pivot candidate d:
    score(max_tf, min_dl) bounds every posting in the block for any
    avgdl).  If the block-level sum cannot reach theta, the whole
    aligned block range [d, min block boundary] is skipped without
-   decoding a single payload.
+   decoding a single payload.  Conjunctive mode applies the same
+   check over every list in maxscore.strict_intersection.
 
 Rank-safety: identical guard discipline to operators/maxscore.py — the
 final ranking compares round(score, 6), so every prune tests
@@ -40,12 +42,10 @@ fallback for head terms is operators/topk.py.
 
 from __future__ import annotations
 
-import heapq
 from bisect import bisect_left
 
 import numpy as np
 
-from .. import config
 from . import scoring
 from .maxscore import (
     MAX_DOCID,
@@ -53,8 +53,10 @@ from .maxscore import (
     PostingCursor,
     TermPostings,
     maxscore_topk_df,
-    round6,
+    open_cursors,
+    score_np,
 )
+from .wand import wand
 
 
 class BMWCursor(PostingCursor):
@@ -83,20 +85,13 @@ class BMWCursor(PostingCursor):
         meta = tp._decoded.get(key)
         if meta is None:
             bmax = [b["max_doc_id"] for b in tp.blocks]
-            max_tf = np.array([b["max_tf"] for b in tp.blocks], dtype=np.float64)
-            if standard == scoring.BM25:
-                # same constants AND op order as PostingCursor.score /
-                # operators/scoring.py (rank-identity critical)
-                min_dl = np.array(
-                    [b["min_dl"] for b in tp.blocks], dtype=np.float64
-                )
-                bj = config.BM25_ONE_MINUS_B + (config.BM25_B * (min_dl / avgdl))
-                bub = (
-                    max_tf / ((config.BM25_K1 * bj) + max_tf)
-                ) * tp.idf
-            else:
-                bub = (1 + np.log10(max_tf)) * tp.idf
-            blist = bub.tolist()
+            blist = score_np(  # PostingCursor's block scoring
+                standard,
+                np.array([b["max_tf"] for b in tp.blocks], dtype=np.float64),
+                np.array([b["min_dl"] for b in tp.blocks], dtype=np.float64),
+                tp.idf,
+                avgdl,
+            ).tolist()
             # min over the list's block bounds: when the pivot prefix's
             # min-bound sum already reaches theta, NO position can be
             # shallow-skipped (bsum >= sum of mins everywhere), so the
@@ -109,8 +104,7 @@ class BMWCursor(PostingCursor):
         self.bmax, self.bub, self.min_bub = meta
 
 def _shallow_frontier(
-    lists: list[BMWCursor], d: int, cap: int, theta: float,
-    require_all: bool = False,
+    lists: list[BMWCursor], d: int, cap: int, theta: float
 ) -> int:
     """Smallest docid x in [d, cap) where the combined per-block score
     bound of ``lists`` could still reach theta — or ``cap`` when no such
@@ -118,10 +112,7 @@ def _shallow_frontier(
     (one interval per block edge); cold RUNS of blocks are crossed
     without decoding anything, so the caller's single deep next_geq
     lands directly on the first plausible block (Ding & Suel's
-    candidate-selection move).
-
-    ``require_all`` (conjunctive): a list with no block reaching x means
-    no qualifying doc >= x at all -> MAX_DOCID (terminate)."""
+    candidate-selection move)."""
     sbis = [bisect_left(c.bmax, d) for c in lists]
     cur = d
     while True:
@@ -132,8 +123,6 @@ def _shallow_frontier(
                 bsum += c.bub[s]  # plain floats/ints: no numpy scalars
                 if c.bmax[s] < boundary:
                     boundary = c.bmax[s]
-            elif require_all:
-                return MAX_DOCID
         if bsum >= theta - ROUND_EPS:
             return cur
         if boundary == MAX_DOCID or boundary + 1 >= cap:
@@ -144,21 +133,17 @@ def _shallow_frontier(
                 sbis[j] += 1
 
 
-def _evaluate(live: list[BMWCursor], q: int) -> float:
-    """Full score of the doc all of live[0..q] are aligned on."""
-    score = 0.0
+def _skip(live: list[BMWCursor], q: int, d: int, theta: float) -> int:
+    """WAND ``skip`` hook: the first docid >= d where the block-level
+    bound of live[0..q] could reach theta, capped where the next list
+    joins the pivot set (the bound changes there)."""
+    smin = 0.0
     for i in range(q + 1):
-        score += live[i].score()
-    return score
-
-
-def _push(heap: list, k: int, docid: int, score: float) -> float:
-    """Heap add with the exhaustive boundary rule (round desc, docid
-    asc); returns the new theta (0.0 while the heap is short)."""
-    heapq.heappush(heap, (round6(score), -docid, score))
-    if len(heap) > k:
-        heapq.heappop(heap)
-    return heap[0][0] if len(heap) == k else 0.0
+        smin += live[i].min_bub
+    if smin >= theta - ROUND_EPS:
+        return d  # no position is shallow-skippable; skip the walk
+    cap = live[q + 1].docid() if q + 1 < len(live) else MAX_DOCID
+    return _shallow_frontier(live[: q + 1], d, cap, theta)
 
 
 def block_max_wand(
@@ -167,129 +152,7 @@ def block_max_wand(
     """Returns [(docid, raw_score)] sorted by (-round(score,6), docid),
     length <= k — the same contract (and the same conjunctive
     strict-intersection semantics) as maxscore.max_score."""
-    if not cursors or k <= 0:
-        return []
-    if conjunctive:
-        return _bmw_conjunctive(cursors, k)
-
-    heap: list[tuple[float, int, float]] = []
-    theta = 0.0
-    live = [c for c in cursors if c.docid() != MAX_DOCID]
-    while live:
-        live.sort(key=lambda c: c.docid())
-        while live and live[-1].docid() == MAX_DOCID:
-            live.pop()
-        if not live:
-            break
-
-        # --- WAND pivot over global term UBs ---
-        full = len(heap) == k
-        acc = 0.0
-        p = -1
-        for i, c in enumerate(live):
-            acc += c.ub
-            if not full or acc >= theta - ROUND_EPS:
-                p = i
-                break
-        if p < 0:
-            break  # no remaining doc can round into the heap
-        d = live[p].docid()
-        # lists beyond the pivot already sitting on d contribute to both
-        # the bound and the evaluation (sorted: they are contiguous)
-        q = p
-        while q + 1 < len(live) and live[q + 1].docid() == d:
-            q += 1
-
-        # --- shallow block-max check (no decode) ---
-        if full:
-            smin = 0.0
-            for i in range(q + 1):
-                smin += live[i].min_bub
-            if smin >= theta - ROUND_EPS:
-                nxt = d  # no position is shallow-skippable; skip the walk
-            else:
-                cap = live[q + 1].docid() if q + 1 < len(live) else MAX_DOCID
-                nxt = _shallow_frontier(live[: q + 1], d, cap, theta)
-            if nxt > d:
-                # nothing in [d, nxt) can make the heap — one deep jump
-                # straight to the first plausible block (or to where the
-                # next list joins the pivot set and the bound changes)
-                for i in range(q + 1):
-                    live[i].next_geq(nxt)
-                continue
-
-        if live[0].docid() == d:
-            # all lists up to q aligned: evaluate d fully
-            theta = _push(heap, k, d, _evaluate(live, q))
-            for i in range(q + 1):
-                live[i].next()
-        else:
-            # advance the largest-UB lagging list to d (classic WAND
-            # picker: fastest theta growth, most skipping)
-            j = max(
-                (i for i in range(p) if live[i].docid() < d),
-                key=lambda i: live[i].ub,
-            )
-            live[j].next_geq(d)
-
-    out = [(-negid, raw) for rounded, negid, raw in heap]
-    out.sort(key=lambda t: (-round6(t[1]), t[0]))
-    return out
-
-
-def _bmw_conjunctive(cursors: list[BMWCursor], k: int) -> list[tuple[int, float]]:
-    """Conjunctive DAAT with shallow block-max pruning.
-
-    A doc qualifies only if present in EVERY cursor's list (strict
-    matched == n, the documented divergence from the reference's
-    partial-score quirk — see maxscore.max_score docstring), so the
-    candidate stream is the alignment frontier d = max(current docids);
-    before decoding toward d, the block-level bound decides whether the
-    whole aligned block range can be skipped."""
-    heap: list[tuple[float, int, float]] = []
-    theta = 0.0
-    while True:
-        d = 0
-        for c in cursors:
-            cd = c.docid()
-            if cd == MAX_DOCID:
-                d = MAX_DOCID
-                break
-            d = max(d, cd)
-        if d == MAX_DOCID:
-            break
-
-        if len(heap) == k:
-            nxt = _shallow_frontier(
-                cursors, d, MAX_DOCID, theta, require_all=True
-            )
-            if nxt == MAX_DOCID:
-                break  # some list holds nothing >= the frontier: done
-            if nxt > d:
-                # no doc in [d, nxt) can reach theta even if every list
-                # aligned there — cross the cold range metadata-only
-                for c in cursors:
-                    c.next_geq(nxt)
-                continue
-
-        aligned = True
-        for c in cursors:
-            c.next_geq(d)
-            if c.docid() != d:
-                aligned = False  # d dropped; frontier recomputes
-                break
-        if not aligned:
-            continue
-        score = 0.0
-        for c in cursors:
-            score += c.score()
-        theta = _push(heap, k, d, score)
-        for c in cursors:
-            c.next()
-
-    out = [(-negid, raw) for rounded, negid, raw in heap]
-    out.sort(key=lambda t: (-round6(t[1]), t[0]))
-    return out
+    return wand(cursors, k, conjunctive, skip=_skip)
 
 
 def bmw_topk(
@@ -302,15 +165,14 @@ def bmw_topk(
     k: int,
     conjunctive: bool,
 ) -> list[tuple[int, float]]:
-    """One query end-to-end: one cursor PER TOKEN OCCURRENCE (duplicate
-    query tokens double-score, as in the reference's getPostingLists),
-    missing terms dropped, Block-Max WAND over the rest."""
-    cursors = [
-        BMWCursor(term_postings[t], codec, standard, n_docs, avgdl)
-        for t in query_tokens
-        if t in term_postings
-    ]
-    return block_max_wand(cursors, k, conjunctive)
+    """One query end-to-end: ``open_cursors`` then Block-Max WAND."""
+    return block_max_wand(
+        open_cursors(
+            term_postings, query_tokens, codec, standard, n_docs, avgdl,
+            BMWCursor,
+        ),
+        k, conjunctive,
+    )
 
 
 def bmw_topk_df(

@@ -12,8 +12,12 @@ Faithful re-implementation of the reference's query engine
   skipped blocks are never DECODED, and with lazy fetch never read);
 - min-heap of size k supplies theta; pivot advances while
   ub[pivot] <= theta;
-- conjunctive mode replicates the reference's idToSkip / current = -1
-  machinery (Scorer.java:109-137).
+- conjunctive mode runs ``strict_intersection`` instead of the
+  reference's idToSkip machinery (Scorer.java:109-137; see max_score).
+
+The DAAT core of every driver family lives here once: the cursor,
+``open_cursors``, the heap ``push``, ``ranked`` and the conjunctive
+kernel; WAND and Block-Max WAND add only pivot selection and skipping.
 
 Ties: the reference heap compares score only (order undefined); we pin
 descending score then ascending docid, matching the exhaustive oracle.
@@ -30,14 +34,15 @@ MaxScore is rank-safe: both paths return the same top-k.
 
 from __future__ import annotations
 
-import sys
+import heapq
+import importlib
 import math
+import sys
 from dataclasses import dataclass, field
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
-from .. import config
 from ..functions import codecs
 from . import scoring
 
@@ -88,6 +93,17 @@ class TermPostings:
     _decoded: dict = field(default_factory=dict, repr=False, compare=False)
 
 
+def score_np(standard: str, tfs, dls, idf: float, avgdl: float) -> np.ndarray:
+    """Scores of a block's postings (or, fed per-block (max_tf, min_dl),
+    the block score bounds): scoring.bm25_np / tfidf_np keep the
+    scalar form's constants AND op order (rank-identity critical —
+    numpy float64 elementwise ops are IEEE-double identical to the
+    Python-scalar evaluation at the same parenthesization)."""
+    if standard == scoring.BM25:
+        return scoring.bm25_np(tfs, dls, idf, avgdl)
+    return scoring.tfidf_np(tfs, idf)
+
+
 class PostingCursor:
     """docId()/next()/nextGEQ()/score() cursor over encoded blocks.
 
@@ -128,22 +144,13 @@ class PostingCursor:
             self.tp._decoded[key] = dec
         self._ids, self._idlist, tfs, dls = dec
         # whole-block score vector, memoized per (codec, block,
-        # standard, avgdl): identical constants AND op order as the
-        # scalar form / operators/scoring.py (rank-identity critical —
-        # numpy float64 elementwise ops are IEEE-double identical to
-        # the Python-scalar evaluation at the same parenthesization)
+        # standard, avgdl)
         skey = (self.codec, bi, self.standard, self.avgdl)
         sc = self.tp._decoded.get(skey)
         if sc is None:
-            if self.standard == scoring.BM25:
-                bj = config.BM25_ONE_MINUS_B + (
-                    config.BM25_B * (dls.astype(np.float64) / self.avgdl)
-                )
-                sc = (
-                    (tfs / ((config.BM25_K1 * bj) + tfs)) * self.tp.idf
-                ).tolist()
-            else:
-                sc = ((1 + np.log10(tfs)) * self.tp.idf).tolist()
+            sc = score_np(
+                self.standard, tfs, dls, self.tp.idf, self.avgdl
+            ).tolist()
             self.tp._decoded[skey] = sc
         self._scores = sc
         self._pos = 0
@@ -195,6 +202,99 @@ class PostingCursor:
 ROUND_EPS = 0.5e-6
 
 
+def open_cursors(
+    term_postings: dict[str, TermPostings],
+    query_tokens: list[str],
+    codec: str,
+    standard: str,
+    n_docs: int,
+    avgdl: float,
+    cls: type = PostingCursor,
+) -> list[PostingCursor]:
+    """One cursor PER TOKEN OCCURRENCE (duplicate query tokens
+    double-score, QueryProcessorMain has no dedup); terms missing from
+    the index are dropped.  Duplicate tokens share identical lists, so
+    conjunctive "every cursor" equals "every existing distinct term"."""
+    return [
+        cls(term_postings[t], codec, standard, n_docs, avgdl)
+        for t in query_tokens
+        if t in term_postings
+    ]
+
+
+def push(heap: list, k: int, docid: int, score: float) -> float:
+    """Heap add with the exhaustive boundary rule: the
+    (rounded_score, -docid, raw_score) min-heap evicts the lowest
+    rounded score, largest docid first.  Returns the new theta (0.0
+    while the heap holds fewer than k docs)."""
+    heapq.heappush(heap, (round6(score), -docid, score))
+    if len(heap) > k:
+        heapq.heappop(heap)
+    return heap[0][0] if len(heap) == k else 0.0
+
+
+def ranked(heap: list) -> list[tuple[int, float]]:
+    """[(docid, raw_score)] of a ``push`` heap sorted by
+    (-round(score, 6), docid) — the exhaustive oracle's ranking."""
+    out = [(-negid, raw) for _rounded, negid, raw in heap]
+    out.sort(key=lambda t: (-round6(t[1]), t[0]))
+    return out
+
+
+def strict_intersection(
+    cursors: list[PostingCursor], k: int, skip=None
+) -> list[tuple[int, float]]:
+    """Conjunctive DAAT of every cursor family: a doc qualifies only if
+    EVERY cursor's list holds it (the SQL oracle's strict nmatch ==
+    n_required), so candidates come from the alignment frontier
+    d = max(current docids).  The only rank-safe global-UB prune is
+    total (a single-term theta is not rank-safe here): stop once the
+    heap is full and the sum of EVERY cursor's UB cannot round into it.
+    ``skip`` is wand.wand's hook, applied over every cursor."""
+    if not cursors or k <= 0:
+        return []
+    heap: list[tuple[float, int, float]] = []
+    theta = 0.0
+    ub_total = sum(c.ub for c in cursors)
+    last = len(cursors) - 1
+    while True:
+        full = len(heap) == k
+        if full and ub_total < theta - ROUND_EPS:
+            break
+        d = 0
+        for c in cursors:
+            cd = c.docid()
+            if cd == MAX_DOCID:
+                d = MAX_DOCID
+                break
+            d = max(d, cd)
+        if d == MAX_DOCID:
+            break
+        if full and skip is not None:
+            nxt = skip(cursors, last, d, theta)
+            if nxt == MAX_DOCID:
+                break
+            if nxt > d:
+                for c in cursors:
+                    c.next_geq(nxt)
+                continue
+        aligned = True
+        for c in cursors:
+            c.next_geq(d)
+            if c.docid() != d:
+                aligned = False  # d dropped; the frontier recomputes
+                break
+        if not aligned:
+            continue
+        score = 0.0
+        for c in cursors:
+            score += c.score()
+        theta = push(heap, k, d, score)
+        for c in cursors:
+            c.next()
+    return ranked(heap)
+
+
 def max_score(cursors: list[PostingCursor], k: int, conjunctive: bool) -> list[tuple[int, float]]:
     """Reference Scorer.maxScore semantics (``Scorer.java:85-162``) with
     two deliberate, documented divergences that pin the undefined /
@@ -208,14 +308,15 @@ def max_score(cursors: list[PostingCursor], k: int, conjunctive: bool) -> list[t
       docid asc) exactly;
     - in conjunctive mode the reference heap-adds a doc missing from a
       NON-essential list with a partial score (Scorer.java breaks out
-      of the non-essential loop and still adds); we require every
-      cursor to contain the doc (matched == n), matching the SQL
+      of the non-essential loop and still adds); we run the shared
+      strict-intersection kernel instead (``strict_intersection``),
+      which requires every cursor to contain the doc, matching the SQL
       oracle's strict nmatch == n_required semantics.
 
     Returns [(docid, raw_score)] sorted by (-round(score,6), docid),
     length <= k."""
-    import heapq
-
+    if conjunctive:
+        return strict_intersection(cursors, k)
     if not cursors or k <= 0:
         return []
     cursors = sorted(cursors, key=lambda c: c.ub)  # ascending term UB
@@ -225,60 +326,33 @@ def max_score(cursors: list[PostingCursor], k: int, conjunctive: bool) -> list[t
         acc += c.ub
         upper.append(acc)
 
-    # (rounded_score, -docid, raw_score) min-heap: evicts the lowest
-    # rounded score, largest docid first — the exhaustive boundary rule.
     heap: list[tuple[float, int, float]] = []
     theta = 0.0
     pivot = 0
-    id_to_skip = -1
     current = min(c.docid() for c in cursors)
 
     n = len(cursors)
     while pivot < n and current != MAX_DOCID:
         score = 0.0
-        matched = 0
         nxt = MAX_DOCID
         for i in range(pivot, n):
             if cursors[i].docid() == current:
                 score += cursors[i].score()
-                matched += 1
                 cursors[i].next()
-            elif conjunctive:
-                if current != -1:
-                    id_to_skip = current
-                    current = -1
-                    score = 0.0
-                else:
-                    if cursors[i].docid() == id_to_skip:
-                        cursors[i].next()
             nxt = min(nxt, cursors[i].docid())
-        if current > 0:
-            complete = True
-            for i in range(pivot - 1, -1, -1):
-                if score + upper[i] < theta - ROUND_EPS:
-                    complete = False
-                    break
-                cursors[i].next_geq(current)
-                if cursors[i].docid() == current:
-                    score += cursors[i].score()
-                    matched += 1
-                elif conjunctive:
-                    complete = False
-                    break
-            if not conjunctive or (complete and matched == n):
-                # add to heap (reference: add, poll if > k, theta = kth)
-                heapq.heappush(heap, (round6(score), -current, score))
-                if len(heap) > k:
-                    heapq.heappop(heap)
-                if len(heap) == k:
-                    theta = heap[0][0]
-                    while pivot < n and upper[pivot] < theta - ROUND_EPS:
-                        pivot += 1
+        for i in range(pivot - 1, -1, -1):
+            if score + upper[i] < theta - ROUND_EPS:
+                break
+            cursors[i].next_geq(current)
+            if cursors[i].docid() == current:
+                score += cursors[i].score()
+        # add to heap (reference: add, poll if > k, theta = kth)
+        theta = push(heap, k, current, score)
+        while pivot < n and upper[pivot] < theta - ROUND_EPS:
+            pivot += 1
         current = nxt
 
-    out = [(-negid, raw) for rounded, negid, raw in heap]
-    out.sort(key=lambda t: (-round6(t[1]), t[0]))
-    return out
+    return ranked(heap)
 
 
 def maxscore_topk(
@@ -291,18 +365,11 @@ def maxscore_topk(
     k: int,
     conjunctive: bool,
 ) -> list[tuple[int, float]]:
-    """One query end-to-end: open one cursor PER TOKEN OCCURRENCE
-    (duplicate query tokens double-score, QueryProcessorMain has no
-    dedup), drop missing terms, run MaxScore."""
-    cursors = [
-        PostingCursor(term_postings[t], codec, standard, n_docs, avgdl)
-        for t in query_tokens
-        if t in term_postings
-    ]
-    # conjunctive semantics: every cursor's list must contain the doc —
-    # duplicate tokens share identical lists so this matches "every
-    # existing distinct term".
-    return max_score(cursors, k, conjunctive)
+    """One query end-to-end: ``open_cursors`` then MaxScore."""
+    return max_score(
+        open_cursors(term_postings, query_tokens, codec, standard, n_docs, avgdl),
+        k, conjunctive,
+    )
 
 
 def maxscore_topk_df(
@@ -318,9 +385,9 @@ def maxscore_topk_df(
     as operators/topk.exhaustive_topk (rank over rounded score, docid
     ties ascending), so the two paths are row-identical.
 
-    ``_topk_fn`` swaps the per-query DAAT scorer (same signature as
-    ``maxscore_topk``) — operators/bmw.py reuses this batch plumbing for
-    Block-Max WAND.
+    ``_topk_fn`` swaps the per-query scorer (same signature as
+    ``maxscore_topk``) — the WAND, Block-Max WAND and TAAT families
+    (operators/wand.py, bmw.py, taat.py) reuse this batch plumbing.
 
     Ranks and rounding are computed driver-side: the DAAT scorers
     already return rows sorted by exactly the ranking key
@@ -374,28 +441,19 @@ DRIVER_POSTING_BYTES_BUDGET = 256 << 20
 _RAW_POSTING_BYTES = 8  # conservative pre-compression per-posting width
 
 
-def _driver_topk_fn(family: str):
-    """Driver-side DAAT scorer for a traversal family name.
+# Driver-side traversal families: operators/<family>.py's
+# ``<family>_topk`` (maxscore_topk's signature), all rank-identical to
+# the exhaustive oracle.  Looked up on the module at CALL time, so a
+# wrapper installed over that attribute (perfbench/run.py's tracer) is
+# the one that serves.
+_FAMILIES = ("maxscore", "wand", "taat", "bmw")
 
-    All four families share maxscore_topk_df's fetch/rounding/tie
-    plumbing and are rank-identical to the exhaustive oracle (the
-    reference's Scorer.java:85-162 family contract), so the dispatcher
-    can swap the per-query kernel freely."""
-    if family == "maxscore":
-        return None  # maxscore_topk_df's default
-    if family == "wand":
-        from .wand import wand_topk
 
-        return wand_topk
-    if family == "taat":
-        from .taat import taat_topk_fn
-
-        return taat_topk_fn(None)  # exact regime (acc_cap=None)
-    if family == "bmw":
-        from .bmw import bmw_topk
-
-        return bmw_topk
-    raise ValueError(f"unknown traversal family: {family!r}")
+def _family_topk(family: str):
+    if family not in _FAMILIES:
+        raise ValueError(f"unknown traversal family: {family!r}")
+    module = importlib.import_module(f"{__package__}.{family}")
+    return getattr(module, f"{family}_topk")
 
 
 def serve_topk(
@@ -426,7 +484,7 @@ def serve_topk(
     tests/test_maxscore.py::test_serve_topk_dispatch_routes_agree."""
     from ..functions.tokenizer import tokenize
 
-    topk_fn = _driver_topk_fn(family)  # validate family up front
+    topk_fn = _family_topk(family)  # validate family up front
     terms = sorted(
         {t for _, text in queries for t in tokenize(text, reader.parse)}
     )

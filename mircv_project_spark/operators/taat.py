@@ -31,26 +31,28 @@ intersection — the maxscore.max_score contract).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from .maxscore import (
     PostingCursor,
     TermPostings,
     maxscore_topk_df,
-    round6,
+    open_cursors,
+    push,
+    ranked,
 )
 from . import scoring  # noqa: F401
 
 
-def _term_arrays(tp: TermPostings, codec: str, standard: str,
-                 n_docs: int, avgdl: float):
-    """Full (docids, scores) of one term's list as flat numpy arrays —
+def _term_arrays(cur: PostingCursor):
+    """Full (docids, scores) of one cursor's list as flat numpy arrays —
     reuses PostingCursor's memoized per-block decode + score vectors
     (read-only; the arrays concatenate, never mutate the cache)."""
-    cur = PostingCursor(tp, codec, standard, n_docs, avgdl)
     ids, scores = [], []
     bi = 0
-    while bi < len(tp.blocks):
+    while bi < len(cur.tp.blocks):
         cur._load(bi)
         ids.append(cur._ids)
         scores.append(np.asarray(cur._scores, dtype=np.float64))
@@ -72,19 +74,20 @@ def taat_topk(
     acc_cap: int | None = None,
 ) -> list[tuple[int, float]]:
     """[(docid, raw_score)] sorted by (-round(score,6), docid), length
-    <= k — the maxscore.max_score contract."""
-    toks = [t for t in query_tokens if t in term_postings]
-    if not toks or k <= 0:
+    <= k — the maxscore.max_score contract.  ``acc_cap=None`` (exact)
+    is the ``maxscore_topk`` signature serve_topk dispatches to."""
+    cursors = open_cursors(
+        term_postings, query_tokens, codec, standard, n_docs, avgdl
+    )
+    if not cursors or k <= 0:
         return []
     # rarest-first processing order (df asc, term asc for determinism)
-    toks.sort(key=lambda t: (term_postings[t].df, t))
+    cursors.sort(key=lambda c: (c.tp.df, c.tp.term))
 
     acc: dict[int, float] = {}
     cnt: dict[int, int] = {}
-    for t in toks:
-        ids, scores = _term_arrays(
-            term_postings[t], codec, standard, n_docs, avgdl
-        )
+    for cur in cursors:
+        ids, scores = _term_arrays(cur)
         for d, s in zip(ids.tolist(), scores.tolist()):
             a = acc.get(d)
             if a is None:
@@ -96,26 +99,12 @@ def taat_topk(
                 acc[d] = a + s
                 cnt[d] += 1
 
-    n_req = len(toks)
-    items = [
-        (d, s)
-        for d, s in acc.items()
-        if not conjunctive or cnt[d] == n_req
-    ]
-    items.sort(key=lambda t: (-round6(t[1]), t[0]))
-    return items[:k]
-
-
-def taat_topk_fn(acc_cap: int | None = None):
-    """maxscore_topk_df-compatible scorer with a bound accumulator cap."""
-
-    def fn(tp, toks, codec, standard, n_docs, avgdl, k, conjunctive):
-        return taat_topk(
-            tp, toks, codec, standard, n_docs, avgdl, k, conjunctive,
-            acc_cap=acc_cap,
-        )
-
-    return fn
+    n_req = len(cursors)
+    heap: list[tuple[float, int, float]] = []
+    for d, s in acc.items():
+        if not conjunctive or cnt[d] == n_req:
+            push(heap, k, d, s)
+    return ranked(heap)
 
 
 def taat_topk_df(
@@ -131,5 +120,5 @@ def taat_topk_df(
     (same fetch, rounding and tie rules — shared plumbing)."""
     return maxscore_topk_df(
         reader, queries, standard, k, conjunctive,
-        _topk_fn=taat_topk_fn(acc_cap),
+        _topk_fn=functools.partial(taat_topk, acc_cap=acc_cap),
     )

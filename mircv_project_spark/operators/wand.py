@@ -7,10 +7,10 @@ Herscovici, Soffer, Zien — "Efficient query evaluation using a two-level
 retrieval process", CIKM 2003).  It prunes with GLOBAL term upper
 bounds only (the lexicon's bm25_ub/tfidf_ub,
 ``model/LexiconEntry.java:40-42``) and needs no per-block metadata at
-all — which is exactly why it stays a separate serve path instead of a
-BMW flag: it is the classic baseline the block-max papers compare
-against, and it runs against any store whose lists carry no block-max
-arrays.
+all.  This module owns the one WAND pivot loop; Block-Max WAND is this
+loop plus a ``skip`` hook that reads the per-block bounds, so plain
+WAND stays the classic baseline the block-max papers compare against
+and runs against any store whose lists carry no block-max arrays.
 
 Pivot walk: cursors sorted by current docid; the pivot is the shortest
 prefix whose UB sum could still round into the heap
@@ -22,13 +22,12 @@ largest-UB lagging list jumps forward (fastest theta growth).
 
 Rank-safety contract identical to maxscore.max_score / bmw: heap orders
 (round6(score), -docid), output sorted (-round6, docid), conjunctive =
-strict intersection.  Same top-k as operators/topk.exhaustive_topk on
-both standards, every codec — shared oracle.
+the shared strict-intersection kernel (maxscore.strict_intersection).
+Same top-k as operators/topk.exhaustive_topk on both standards, every
+codec — shared oracle.
 """
 
 from __future__ import annotations
-
-import heapq
 
 from . import scoring  # noqa: F401  (re-export convention of the DAAT family)
 from .maxscore import (
@@ -37,26 +36,28 @@ from .maxscore import (
     PostingCursor,
     TermPostings,
     maxscore_topk_df,
-    round6,
+    open_cursors,
+    push,
+    ranked,
+    strict_intersection,
 )
 
 
-def _push(heap: list, k: int, docid: int, score: float) -> float:
-    heapq.heappush(heap, (round6(score), -docid, score))
-    if len(heap) > k:
-        heapq.heappop(heap)
-    return heap[0][0] if len(heap) == k else 0.0
-
-
 def wand(
-    cursors: list[PostingCursor], k: int, conjunctive: bool = False
+    cursors: list[PostingCursor], k: int, conjunctive: bool = False, skip=None
 ) -> list[tuple[int, float]]:
     """[(docid, raw_score)] sorted by (-round(score,6), docid), length
-    <= k — the same contract as maxscore.max_score / bmw.block_max_wand."""
+    <= k — the same contract as maxscore.max_score / bmw.block_max_wand.
+
+    ``skip(live, q, d, theta) -> docid``, called only while the heap is
+    full, may return a docid past the pivot doc d below which no doc
+    can reach theta given live[0..q] (the cursors sitting at or before
+    d); those cursors then jump there.  Conjunctive mode hands it to
+    the strict-intersection kernel."""
+    if conjunctive:
+        return strict_intersection(cursors, k, skip)
     if not cursors or k <= 0:
         return []
-    if conjunctive:
-        return _wand_conjunctive(cursors, k)
 
     heap: list[tuple[float, int, float]] = []
     theta = 0.0
@@ -79,68 +80,37 @@ def wand(
         if p < 0:
             break  # no remaining doc can round into the heap
         d = live[p].docid()
+        # lists beyond the pivot already sitting on d contribute to both
+        # the bound and the evaluation (sorted: they are contiguous)
         q = p
         while q + 1 < len(live) and live[q + 1].docid() == d:
             q += 1
 
+        if full and skip is not None:
+            nxt = skip(live, q, d, theta)
+            if nxt > d:
+                for i in range(q + 1):
+                    live[i].next_geq(nxt)
+                continue
+
         if live[0].docid() == d:
+            # all lists up to q aligned: evaluate d fully
             score = 0.0
             for i in range(q + 1):
                 score += live[i].score()
-            theta = _push(heap, k, d, score)
+            theta = push(heap, k, d, score)
             for i in range(q + 1):
                 live[i].next()
         else:
+            # advance the largest-UB lagging list to d (classic WAND
+            # picker: fastest theta growth, most skipping)
             j = max(
                 (i for i in range(p) if live[i].docid() < d),
                 key=lambda i: live[i].ub,
             )
             live[j].next_geq(d)
 
-    out = [(-negid, raw) for _rounded, negid, raw in heap]
-    out.sort(key=lambda t: (-round6(t[1]), t[0]))
-    return out
-
-
-def _wand_conjunctive(cursors: list[PostingCursor], k: int) -> list[tuple[int, float]]:
-    """Conjunctive DAAT on the alignment frontier d = max(current
-    docids).  The only rank-safe global-UB prune here is total: once
-    the heap is full and the sum of EVERY cursor's UB cannot round
-    into it, no remaining doc can either (a single-term theta is not
-    rank-safe in conjunctive mode — the maxscore.py pin)."""
-    heap: list[tuple[float, int, float]] = []
-    theta = 0.0
-    ub_total = sum(c.ub for c in cursors)
-    while True:
-        if len(heap) == k and ub_total < theta - ROUND_EPS:
-            break
-        d = 0
-        for c in cursors:
-            cd = c.docid()
-            if cd == MAX_DOCID:
-                d = MAX_DOCID
-                break
-            d = max(d, cd)
-        if d == MAX_DOCID:
-            break
-        aligned = True
-        for c in cursors:
-            c.next_geq(d)
-            if c.docid() != d:
-                aligned = False
-                break
-        if not aligned:
-            continue
-        score = 0.0
-        for c in cursors:
-            score += c.score()
-        theta = _push(heap, k, d, score)
-        for c in cursors:
-            c.next()
-
-    out = [(-negid, raw) for _rounded, negid, raw in heap]
-    out.sort(key=lambda t: (-round6(t[1]), t[0]))
-    return out
+    return ranked(heap)
 
 
 def wand_topk(
@@ -153,15 +123,11 @@ def wand_topk(
     k: int,
     conjunctive: bool,
 ) -> list[tuple[int, float]]:
-    """One query end-to-end: one cursor PER TOKEN OCCURRENCE (duplicate
-    query tokens double-score, as in the reference's getPostingLists),
-    missing terms dropped, WAND over the rest."""
-    cursors = [
-        PostingCursor(term_postings[t], codec, standard, n_docs, avgdl)
-        for t in query_tokens
-        if t in term_postings
-    ]
-    return wand(cursors, k, conjunctive)
+    """One query end-to-end: ``open_cursors`` then WAND."""
+    return wand(
+        open_cursors(term_postings, query_tokens, codec, standard, n_docs, avgdl),
+        k, conjunctive,
+    )
 
 
 def wand_topk_df(

@@ -149,12 +149,14 @@ def test_warm_batch_issues_one_spark_job(spark, vb_index):
     assert len(jobs) <= 1, f"warm batch ran {len(jobs)} Spark jobs: {jobs}"
 
 
-def test_serve_topk_dispatch_routes_agree(spark, vb_index):
+def test_serve_topk_dispatch_routes_agree(spark, vb_index, monkeypatch):
     """serve_topk routes by estimated batch posting bytes: default
     budget keeps the gate corpus on the driver DAAT; budget=0 forces
     the distributed pruned path.  Both routes must emit row-identical
     results (they share the exhaustive oracle), and the route decision
     must come from the LEXICON estimate only."""
+    import importlib
+
     from mircv_project_spark.operators.maxscore import serve_topk
 
     _, reader = vb_index
@@ -197,5 +199,33 @@ def test_serve_topk_dispatch_routes_agree(spark, vb_index):
             driver_bytes_budget=0, family=family,
         )
         cmp_rank_frames(fam_dist, drv)
+        # every family's conjunctive mode on the driver route matches
+        # MaxScore's conjunctive frame
+        m_c = {}
+        fam_conj = serve_topk(
+            reader, CONJ_QUERY_SET, scoring.BM25, k=10, conjunctive=True,
+            metrics=m_c, family=family,
+        )
+        assert m_c["route"] == "driver"
+        cmp_rank_frames(fam_conj, conj_drv)
+    # Dispatch resolves <family>_topk through the module attribute at
+    # call time: the per-layer tracer (perfbench/run.py) replaces those
+    # attributes, and a table of function objects captured at import
+    # would silently bypass its wrappers.
+    for family in ("maxscore", "wand", "taat", "bmw"):
+        module = importlib.import_module(
+            f"mircv_project_spark.operators.{family}"
+        )
+        name = f"{family}_topk"
+        inner = getattr(module, name)
+        calls = []
+
+        def counting(*args, _inner=inner, _calls=calls, **kw):
+            _calls.append(1)
+            return _inner(*args, **kw)
+
+        monkeypatch.setattr(module, name, counting)
+        serve_topk(reader, QUERY_SET[:2], scoring.BM25, k=10, family=family)
+        assert len(calls) == 2, (family, calls)
     with _pytest.raises(ValueError):
         serve_topk(reader, QUERY_SET, scoring.BM25, k=10, family="nope")
