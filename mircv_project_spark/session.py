@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 import re
+import site
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # local, local[N], local[*], local[N,F] / local[*,F] (F = task retries).
@@ -47,6 +49,34 @@ def driver_memory(
     return f"{mib // 1024}g" if mib % 1024 == 0 else f"{mib}m"
 
 
+def python_daemon_module(
+    master: str, cwd: str, pythonpath: str | None, jvm_running: bool
+) -> str | None:
+    """``spark.python.daemon.module`` for a session: ``worker_daemon``
+    when every Python worker can import this package as it starts, else
+    None (Spark's own ``pyspark.daemon``).
+
+    That holds only when this call launches the JVM (``jvm_running``
+    False) for a ``local``/``local[N]`` master: its workers then start
+    with this process's ``cwd`` (the first entry of a ``python -m`` path)
+    and ``PYTHONPATH``, and the directory (or zip) holding the package
+    must be ``cwd``, a ``PYTHONPATH`` entry or a site-packages directory.
+    A JVM started earlier, e.g. by ``spark-submit``, gives its workers its
+    own environment, without the ``--py-files`` this process sees on its
+    ``PYTHONPATH``.  Executors of any other master (``local-cluster[...]``
+    included) may get the package only through ``--py-files``, which
+    Spark adds per task, after the daemon has started.
+    """
+    if jvm_running or _LOCAL_MASTER.fullmatch(master.strip()) is None:
+        return None
+    here = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    roots = [cwd, *(pythonpath or "").split(os.pathsep)]
+    roots += site.getsitepackages() + [site.getusersitepackages()]
+    if any(r and os.path.realpath(r) == here for r in roots):
+        return f"{__package__}.worker_daemon"
+    return None
+
+
 def get_spark(
     app_name: str = "mircv-spark",
     master: str | None = None,
@@ -76,6 +106,9 @@ def get_spark(
       thread, at most half of physical memory; a non-local master gets
       1 GiB per core of this host under the same cap.
       SPARK_GRAFT_DRIVER_MEM overrides it.
+    - Python workers forked from ``worker_daemon`` where they can import
+      it (``python_daemon_module``): it skips the zip-archive re-read
+      pyspark's worker does before every task, ~0.15 s of CPU a task.
     """
     cpus = os.cpu_count() or 4
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
@@ -123,4 +156,12 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
+    daemon = python_daemon_module(
+        master,
+        os.getcwd(),
+        os.environ.get("PYTHONPATH"),
+        SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ,
+    )
+    if daemon:
+        builder = builder.config("spark.python.daemon.module", daemon)
     return builder.getOrCreate()

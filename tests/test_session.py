@@ -61,3 +61,43 @@ def test_get_spark_asks_for_the_rule(monkeypatch, master, phys, override, want):
 
     builder = session.get_spark(master=master)
     assert builder._options["spark.driver.memory"] == want
+
+
+def test_python_daemon_module_only_where_workers_can_import_it(tmp_path):
+    """The package's own daemon serves only a JVM this call launches for
+    a local master, and only when the package sits in the workers' cwd,
+    on PYTHONPATH or in site-packages; anything else keeps pyspark's."""
+    import os
+
+    here = os.path.dirname(os.path.dirname(session.__file__))
+    ours = "mircv_project_spark.worker_daemon"
+    for master in ("local", "local[4]", "local[*]", "local[4, 2]"):
+        assert session.python_daemon_module(master, here, None, False) == ours
+    assert session.python_daemon_module(
+        "local[4]", str(tmp_path), os.pathsep.join(["/nowhere", here]), False
+    ) == ours
+    # a JVM already up (spark-submit, an earlier session) has its own env
+    assert session.python_daemon_module("local[4]", here, None, True) is None
+    for master in ("spark://head:7077", "yarn", "local-cluster[2,1,1024]"):
+        assert session.python_daemon_module(master, here, here, False) is None
+    assert session.python_daemon_module("local[4]", str(tmp_path), None, False) is None
+
+
+def test_get_spark_selects_the_daemon_for_a_new_local_jvm(monkeypatch):
+    import os
+
+    from pyspark import SparkContext
+
+    here = os.path.dirname(os.path.dirname(session.__file__))
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.chdir(here)
+    builder = session.get_spark(master="local[2]")
+    assert (
+        builder._options["spark.python.daemon.module"]
+        == "mircv_project_spark.worker_daemon"
+    )
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    builder = session.get_spark(master="local[2]")
+    assert "spark.python.daemon.module" not in builder._options
