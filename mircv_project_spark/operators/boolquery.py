@@ -30,10 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from collections import Counter
+
 from . import scoring
 from ..functions.tokenizer import tokenize
+from ..session import local_frame
 from .index_build import InvertedIndex
-from .topk import _EMPTY_SCHEMA, ROUND_DECIMALS
+from .topk import _EMPTY_SCHEMA, ROUND_DECIMALS, resolve_query_terms
 
 
 def parse_boolean_query(text: str, parse: bool) -> dict[str, list[str]]:
@@ -61,51 +64,27 @@ def boolean_topk(
     spark = index.flat.sparkSession
     parsed = {qid: parse_boolean_query(text, index.parse) for qid, text in queries}
 
-    all_terms = sorted(
-        {t for p in parsed.values() for lst in p.values() for t in lst}
-    )
-    if not all_terms:
+    # must and should terms score alike (qtf counts both); NOT terms only
+    # exclude, and a NOT term missing from the lexicon excludes nothing
+    got = resolve_query_terms(index, [
+        (qid, t, c)
+        for qid, p in parsed.items()
+        for t, c in Counter(p["must"] + p["should"]).items()
+    ])
+    if got is None:
         return spark.createDataFrame([], _EMPTY_SCHEMA)
-    lex = (
-        index.lexicon.where(F.col("term").isin(all_terms))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-
-    score_rows = []  # (qid, term, qtf, df, is_must)
-    not_rows = []  # (qid, term)
-    n_must: dict[str, int] = {}
-    for qid, p in parsed.items():
-        counts: dict[str, list[int]] = {}
-        for t in p["must"]:
-            if t in df_by_term:
-                counts.setdefault(t, [0, 0])
-                counts[t][0] += 1
-        for t in p["should"]:
-            if t in df_by_term:
-                counts.setdefault(t, [0, 0])
-                counts[t][1] += 1
-        n_must[qid] = sum(1 for c in counts.values() if c[0] > 0)
-        for t, (m, s_) in counts.items():
-            score_rows.append((qid, t, m + s_, df_by_term[t], m > 0))
-        for t in set(p["not"]):
-            if t in df_by_term:
-                not_rows.append((qid, t))
-    if not score_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    qt = spark.createDataFrame(
-        score_rows, "qid string, term string, qtf int, df long, is_must boolean"
+    must = {(qid, t) for qid, p in parsed.items() for t in p["must"]}
+    score_rows = [(*r, (r[0], r[1]) in must) for r in got[0]]
+    n_must = dict.fromkeys(parsed, 0)
+    for qid, _, _, _, is_must in score_rows:
+        n_must[qid] += is_must
+    qt = local_frame(
+        spark, score_rows, "qid string, term string, qtf int, df long, is_must boolean"
     )
     matched = index.flat.join(F.broadcast(qt), "term")
-
-    if standard == scoring.BM25:
-        s = scoring.bm25_col(
-            F.col("tf"), F.col("doc_len"), F.col("df"), index.n_docs, index.avgdl
-        )
-    else:
-        s = scoring.tfidf_col(F.col("tf"), F.col("df"), index.n_docs)
+    s = scoring.score_col(
+        standard, F.col("tf"), F.col("doc_len"), F.col("df"), index.n_docs, index.avgdl
+    )
     scored = (
         matched.withColumn("contrib", F.col("qtf") * s)
         .groupBy("qid", "docid")
@@ -117,8 +96,9 @@ def boolean_topk(
     req = F.create_map(*[F.lit(x) for kv in n_must.items() for x in kv])
     scored = scored.where(F.col("nmust") == req[F.col("qid")])
 
+    not_rows = [(qid, t) for qid, p in parsed.items() for t in set(p["not"])]
     if not_rows:
-        nt = spark.createDataFrame(not_rows, "qid string, term string")
+        nt = local_frame(spark, not_rows, "qid string, term string")
         excluded = index.flat.join(F.broadcast(nt), "term").select(
             "qid", "docid"
         )

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from . import scoring
 from .index_build import InvertedIndex
-from .topk import _EMPTY_SCHEMA, _resolve_query_terms, _score_and_rank, query_terms
+from .topk import _EMPTY_SCHEMA, _score_and_rank, query_terms, resolve_query_terms
 
 CHAMPION_M = 32
 CHAMPION_SALT = 16
@@ -89,26 +89,15 @@ def champion_topk(
     (lists are per term), so the serve path prunes the postings scan to
     the query terms FIRST and champions only those lists.
     """
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    qt, n_required = _resolve_query_terms(
-        spark, qt_rows, {r["term"]: r["df"] for r in lex}
-    )
-    if qt is None:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    rows, qt = got
+    terms = sorted({t for _, t, *_ in rows})
     champ = champion_lists(
         index.flat.where(F.col("term").isin(terms)), index.avgdl, m=m
     )
     matched = champ.join(F.broadcast(qt), "term")
     return _score_and_rank(
-        matched, standard, index.n_docs, index.avgdl, k, False, n_required
+        matched, standard, index.n_docs, index.avgdl, k, False, {}
     )

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .index_build import InvertedIndex
-from .topk import _EMPTY_SCHEMA, query_terms
+from .topk import _EMPTY_SCHEMA, query_terms, resolve_query_terms
 
 PL2_C = 1.0  # normalization-2 constant (folded into avgdl/dl at c=1)
 L2 = 0.3010299956639812  # log10(2) as a pinned literal
@@ -78,22 +78,10 @@ def pl2_topk(
     k: int = 10,
 ) -> DataFrame:
     """-> DataFrame(qid string, docno string, rank long, score double)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "cf")
-        .collect()
-    )
-    cf_by_term = {r["term"]: r["cf"] for r in lex}
-    qt_rows = [(q, t, c, cf_by_term[t]) for q, t, c in qt_rows if t in cf_by_term]
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, cf long")
+    got = resolve_query_terms(index, query_terms(queries, index.parse), ("cf",))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    qt = got[1]
 
     matched = index.flat.join(F.broadcast(qt), "term")
     w_micro = F.round(
@@ -171,22 +159,10 @@ def dph_topk(
     model (no c, no mu, no b/k1) beside PL2; same integer-micro
     aggregation discipline and plan shape (broadcast query terms into
     one postings scan, one (qid, docid) aggregate)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "cf")
-        .collect()
-    )
-    cf_by_term = {r["term"]: r["cf"] for r in lex}
-    qt_rows = [(q, t, c, cf_by_term[t]) for q, t, c in qt_rows if t in cf_by_term]
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, cf long")
+    got = resolve_query_terms(index, query_terms(queries, index.parse), ("cf",))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    qt = got[1]
 
     matched = index.flat.join(F.broadcast(qt), "term")
     w_micro = F.round(

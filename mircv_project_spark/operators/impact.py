@@ -50,13 +50,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import scoring
 from .index_build import InvertedIndex
 from .topk import (
     _EMPTY_SCHEMA,
-    _resolve_query_terms,
     _score_and_rank,
     query_terms,
+    resolve_query_terms,
 )
 
 IMPACT_LEVELS = 255  # 8-bit quantization
@@ -123,23 +124,13 @@ def impact_topk(
     """Full-traversal impact-ordered top-k (exact for the quantized
     scoring function): total(d) = sum qtf * impact over matched terms.
     -> (qid, docno, rank, impact long)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    qt, _ = _resolve_query_terms(spark, qt_rows, {r["term"]: r["df"] for r in lex})
-    if qt is None:
-        return spark.createDataFrame([], _EMPTY)
-
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY)
+    rows, qt = got
     if imp is None:
         imp = impact_postings(index, levels=levels)
-    matched = imp.where(F.col("term").isin(terms)).join(
+    matched = imp.where(F.col("term").isin(sorted({t for _, t, *_ in rows}))).join(
         F.broadcast(qt.select("qid", "term", "qtf")), "term"
     )
     totals = matched.groupBy("qid", "docid").agg(
@@ -166,40 +157,23 @@ def impact_topk_saat(
     selected vs available — the early-termination proof the tests
     assert on."""
     spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY), {
-            "segments_total": 0, "segments_selected": 0,
-            "postings_total": 0, "postings_selected": 0,
-        }
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    qt, _ = _resolve_query_terms(spark, qt_rows, {r["term"]: r["df"] for r in lex})
-    if qt is None:
-        return spark.createDataFrame([], _EMPTY), {
-            "segments_total": 0, "segments_selected": 0,
-            "postings_total": 0, "postings_selected": 0,
-        }
-
+    stats = {"segments_total": 0, "segments_selected": 0,
+             "postings_total": 0, "postings_selected": 0}
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return spark.createDataFrame([], _EMPTY), stats
+    rows, qt = got
     if imp is None:
         imp = impact_postings(index, levels=levels)
-    imp_q = imp.where(F.col("term").isin(terms))
+    imp_q = imp.where(F.col("term").isin(sorted({t for _, t, *_ in rows})))
 
     # metadata-only segment selection (driver-tiny: <= levels * |terms|)
     meta = impact_segment_meta(imp_q).collect()
-    qtf_by = {}
-    for q, t, c, _ in [
-        (r["qid"], r["term"], r["qtf"], r["df"]) for r in qt.collect()
-    ]:
+    qtf_by: dict[str, dict[str, int]] = {}
+    for q, t, c, _ in rows:
         qtf_by.setdefault(q, {})[t] = c
 
     selected: dict[str, set[tuple[str, int]]] = {}
-    stats = {"segments_total": 0, "segments_selected": 0,
-             "postings_total": 0, "postings_selected": 0}
     for qid, tw in qtf_by.items():
         segs = [
             (r["term"], int(r["impact"]), int(r["n_postings"]))
@@ -225,9 +199,7 @@ def impact_topk_saat(
     ]
     if not sel_rows:
         return spark.createDataFrame([], _EMPTY), stats
-    sel_df = spark.createDataFrame(
-        sel_rows, "qid string, term string, impact long"
-    )
+    sel_df = local_frame(spark, sel_rows, "qid string, term string, impact long")
     matched = imp_q.join(F.broadcast(sel_df), ["term", "impact"]).join(
         F.broadcast(qt.select("qid", "term", "qtf")), ["qid", "term"]
     )
@@ -273,25 +245,12 @@ def bm25_cascade_topk(
         "qid", (F.col("docno").cast("long") + F.lit(1)).alias("docid")
     )
 
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    qt, n_required = _resolve_query_terms(
-        spark, qt_rows, {r["term"]: r["df"] for r in lex}
-    )
-    if qt is None:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    matched = index.flat.join(F.broadcast(qt), "term").join(
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    matched = index.flat.join(F.broadcast(got[1]), "term").join(
         F.broadcast(cand), ["qid", "docid"]
     )
     return _score_and_rank(
-        matched, scoring.BM25, index.n_docs, index.avgdl, k, False, n_required
+        matched, scoring.BM25, index.n_docs, index.avgdl, k, False, {}
     )

@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 
 from . import scoring
 from .index_build import InvertedIndex
-from .qld import QLD_MU, _MICRO
-from .topk import query_terms
+from .qld import QLD_MU, _MICRO, q_length_map
+from .topk import n_terms, query_terms, resolve_query_terms
 
 LTR_POOL = 20
 
@@ -39,32 +39,14 @@ def ltr_features(
     pool: int = LTR_POOL,
 ) -> DataFrame:
     """-> (qid, docno, bm25, tfidf, qld, n_match, doc_len)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
     schema = (
         "qid string, docno string, bm25 double, tfidf double, qld double,"
         " n_match long, doc_len long"
     )
-    if not qt_rows:
-        return spark.createDataFrame([], schema)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df", "cf")
-        .collect()
-    )
-    meta = {r["term"]: (r["df"], r["cf"]) for r in lex}
-    qt_rows = [
-        (q, t, c, meta[t][0], meta[t][1]) for q, t, c in qt_rows if t in meta
-    ]
-    if not qt_rows:
-        return spark.createDataFrame([], schema)
-    q_total: dict[str, int] = {}
-    for q, _, c, _, _ in qt_rows:
-        q_total[q] = q_total.get(q, 0) + c
-    qt = spark.createDataFrame(
-        qt_rows, "qid string, term string, qtf int, df long, cf long"
-    )
+    got = resolve_query_terms(index, query_terms(queries, index.parse), ("df", "cf"))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], schema)
+    rows, qt = got
 
     n, avgdl, c_total = index.n_docs, index.avgdl, float(index.sum_doc_len)
     bm25 = scoring.bm25_col(F.col("tf"), F.col("doc_len"), F.col("df"), n, avgdl)
@@ -101,7 +83,7 @@ def ltr_features(
         F.log10(F.lit(QLD_MU) / (F.col("doc_len").cast("double") + F.lit(QLD_MU)))
         * F.lit(_MICRO)
     ).cast("long")
-    qmap = F.create_map(*[F.lit(x) for kv in q_total.items() for x in kv])
+    qmap = q_length_map(rows)
     agg = agg.withColumn(
         "qld_micro", F.col("tsum") + qmap[F.col("qid")].cast("long") * dl_micro
     )
@@ -155,32 +137,14 @@ def training_triplets(
     counts matched terms; mining adds one window split and an
     n_pos x n_neg per-query cross join of two tiny ranked heads.
     """
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
     out_schema = (
         "qid string, pos_docno string, pos_grade int,"
         " neg_docno string, neg_rank long"
     )
-    if not qt_rows:
-        return spark.createDataFrame([], out_schema)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-    qt_rows = [
-        (q, t, c, df_by_term[t]) for q, t, c in qt_rows if t in df_by_term
-    ]
-    if not qt_rows:
-        return spark.createDataFrame([], out_schema)
-    n_required: dict[str, int] = {}
-    for q, _, _, _ in qt_rows:
-        n_required[q] = n_required.get(q, 0) + 1
-    qt = spark.createDataFrame(
-        qt_rows, "qid string, term string, qtf int, df long"
-    )
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], out_schema)
+    rows, qt = got
     bm25 = scoring.bm25_col(
         F.col("tf"), F.col("doc_len"), F.col("df"), index.n_docs, index.avgdl
     )
@@ -194,7 +158,7 @@ def training_triplets(
         F.round(F.col("raw"), 6).desc(), F.col("docid").asc()
     )
     pooled = pooled.withColumn("rank", F.row_number().over(w).cast("long"))
-    req = F.create_map(*[F.lit(x) for kv in n_required.items() for x in kv])
+    req = F.create_map(*[F.lit(x) for kv in n_terms(rows).items() for x in kv])
     pooled = pooled.withColumn("full", F.col("nmatch") == req[F.col("qid")])
 
     wside = Window.partitionBy("qid", "full").orderBy(F.col("rank").asc())

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .index_build import InvertedIndex
-from .topk import _EMPTY_SCHEMA, query_terms
+from .topk import _EMPTY_SCHEMA, query_terms, resolve_query_terms
 
 PIV_S = 0.25  # pivot slope (dyadic; literals 0.75/0.25 on both sides)
 LN10 = 2.302585092994046  # ln(10) as a pinned literal
@@ -65,22 +65,10 @@ def pivoted_topk(
     k: int = 10,
 ) -> DataFrame:
     """-> DataFrame(qid string, docno string, rank long, score double)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-    qt_rows = [(q, t, c, df_by_term[t]) for q, t, c in qt_rows if t in df_by_term]
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, df long")
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    qt = got[1]
 
     matched = index.flat.join(F.broadcast(qt), "term")
     w_micro = F.round(
@@ -143,22 +131,10 @@ def bm25_plus_topk(
     restated in oracle._bm25_plus_topk_sql: delta = 0.5 LITERAL,
     coefficient parenthesization = the engine's BM25 form, idf =
     log10(N/df), rank (micro desc, docid asc))."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-    qt_rows = [(q, t, c, df_by_term[t]) for q, t, c in qt_rows if t in df_by_term]
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, df long")
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    qt = got[1]
 
     matched = index.flat.join(F.broadcast(qt), "term")
     w_micro = F.round(

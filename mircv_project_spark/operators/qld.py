@@ -31,11 +31,11 @@ oracle too or neither):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .index_build import InvertedIndex
-from .topk import _EMPTY_SCHEMA, query_terms
+from .topk import _EMPTY_SCHEMA, query_terms, resolve_query_terms
 
 QLD_MU = 2048.0
 _MICRO = 1e6
@@ -51,6 +51,16 @@ JM_LAMBDA = 0.5
 JM_LOG_LAMBDA_MICRO = -301030
 
 
+def q_length_map(rows) -> Column:
+    """qid -> |q| as a map Column: the qtf sum over a query's
+    ``resolve_query_terms`` rows, so in-lexicon tokens only, with
+    multiplicity preserved."""
+    q_total: dict[str, int] = {}
+    for q, _, c, *_ in rows:
+        q_total[q] = q_total.get(q, 0) + c
+    return F.create_map(*[F.lit(x) for kv in q_total.items() for x in kv])
+
+
 def qld_topk(
     index: InvertedIndex,
     queries: list[tuple[str, str]],
@@ -58,27 +68,10 @@ def qld_topk(
     mu: float = QLD_MU,
 ) -> DataFrame:
     """-> DataFrame(qid string, docno string, rank long, score double)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "cf")
-        .collect()
-    )
-    cf_by_term = {r["term"]: r["cf"] for r in lex}
-    qt_rows = [(q, t, c, cf_by_term[t]) for q, t, c in qt_rows if t in cf_by_term]
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    # |q| per query over in-lexicon tokens only (multiplicity preserved)
-    q_total: dict[str, int] = {}
-    for q, _, c, _ in qt_rows:
-        q_total[q] = q_total.get(q, 0) + c
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, cf long")
+    got = resolve_query_terms(index, query_terms(queries, index.parse), ("cf",))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    rows, qt = got
 
     c_total = float(index.sum_doc_len)
     matched = index.flat.join(F.broadcast(qt), "term")
@@ -103,7 +96,7 @@ def qld_topk(
         F.log10(F.lit(mu) / (F.col("doc_len").cast("double") + F.lit(mu)))
         * F.lit(_MICRO)
     ).cast("long")
-    qmap = F.create_map(*[F.lit(x) for kv in q_total.items() for x in kv])
+    qmap = q_length_map(rows)
     scored = scored.withColumn(
         "micro", F.col("tsum") + qmap[F.col("qid")].cast("long") * dl_micro
     )
@@ -153,26 +146,10 @@ def qljm_topk(
     docid) aggregate; unlike Dirichlet the weight needs dl per row,
     which already rides in ``flat``.
     """
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "cf")
-        .collect()
-    )
-    cf_by_term = {r["term"]: r["cf"] for r in lex}
-    qt_rows = [(q, t, c, cf_by_term[t]) for q, t, c in qt_rows if t in cf_by_term]
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    q_total: dict[str, int] = {}
-    for q, _, c, _ in qt_rows:
-        q_total[q] = q_total.get(q, 0) + c
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, cf long")
+    got = resolve_query_terms(index, query_terms(queries, index.parse), ("cf",))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    rows, qt = got
 
     c_total = float(index.sum_doc_len)
     matched = index.flat.join(F.broadcast(qt), "term")
@@ -190,7 +167,7 @@ def qljm_topk(
         .groupBy("qid", "docid")
         .agg(F.sum(F.col("qtf").cast("long") * F.col("wm")).alias("tsum"))
     )
-    qmap = F.create_map(*[F.lit(x) for kv in q_total.items() for x in kv])
+    qmap = q_length_map(rows)
     scored = scored.withColumn(
         "micro",
         F.col("tsum")
@@ -252,26 +229,10 @@ def qlad_topk(
     docs — at 100 TB that's the same shuffle class as the doc-length
     table the index already maintains.
     """
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "cf")
-        .collect()
-    )
-    cf_by_term = {r["term"]: r["cf"] for r in lex}
-    qt_rows = [(q, t, c, cf_by_term[t]) for q, t, c in qt_rows if t in cf_by_term]
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    q_total: dict[str, int] = {}
-    for q, _, c, _ in qt_rows:
-        q_total[q] = q_total.get(q, 0) + c
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, cf long")
+    got = resolve_query_terms(index, query_terms(queries, index.parse), ("cf",))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    rows, qt = got
 
     c_total = float(index.sum_doc_len)
     du = index.flat.groupBy("docid").agg(
@@ -306,7 +267,7 @@ def qlad_topk(
         )
         * F.lit(_MICRO)
     ).cast("long")
-    qmap = F.create_map(*[F.lit(x) for kv in q_total.items() for x in kv])
+    qmap = q_length_map(rows)
     scored = scored.withColumn(
         "micro", F.col("tsum") + qmap[F.col("qid")].cast("long") * dl_micro
     )

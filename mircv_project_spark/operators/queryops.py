@@ -27,8 +27,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import scoring
+from ..session import local_frame
 from .index_build import InvertedIndex
-from .topk import query_terms
+from .topk import n_terms, query_terms, resolve_query_terms
 
 MSM_M = 2
 
@@ -40,31 +41,13 @@ def msm_topk(
     k: int = 10,
 ) -> DataFrame:
     """-> DataFrame(qid string, docno string, rank long, score double)."""
-    spark = index.flat.sparkSession
     empty = "qid string, docno string, rank long, score double"
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], empty)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-    rows = [
-        (q, t, c, df_by_term[t]) for q, t, c in qt_rows if t in df_by_term
-    ]
-    if not rows:
-        return spark.createDataFrame([], empty)
-    qt = spark.createDataFrame(
-        rows, "qid string, term string, qtf int, df long"
-    )
-    need: dict[str, int] = {}
-    for q, _, _, _ in rows:
-        need[q] = need.get(q, 0) + 1
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], empty)
+    rows, qt = got
     req = F.create_map(
-        *[F.lit(x) for q, n in sorted(need.items()) for x in (q, min(m, n))]
+        *[F.lit(x) for q, n in sorted(n_terms(rows).items()) for x in (q, min(m, n))]
     )
 
     s = scoring.bm25_col(
@@ -100,32 +83,17 @@ def synonym_topk(
     k: int = 10,
 ) -> DataFrame:
     """-> DataFrame(qid string, docno string, rank long, score double)."""
-    spark = index.flat.sparkSession
     empty = "qid string, docno string, rank long, score double"
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], empty)
     expanded: dict[tuple[str, str], int] = {}
-    for q, t, c in qt_rows:
+    for q, t, c in query_terms(queries, index.parse):
         for e in [t] + list(syn_map.get(t, [])):
             expanded[(q, e)] = expanded.get((q, e), 0) + c
-    terms = sorted({t for _, t in expanded})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
+    got = resolve_query_terms(
+        index, [(q, t, c) for (q, t), c in sorted(expanded.items())]
     )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-    rows = [
-        (q, t, c, df_by_term[t])
-        for (q, t), c in sorted(expanded.items())
-        if t in df_by_term
-    ]
-    if not rows:
-        return spark.createDataFrame([], empty)
-    qt = spark.createDataFrame(
-        rows, "qid string, term string, qtf int, df long"
-    )
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], empty)
+    qt = got[1]
     s = scoring.bm25_col(
         F.col("tf"), F.col("doc_len"), F.col("df"), index.n_docs, index.avgdl
     )
@@ -182,24 +150,10 @@ def search_after_topk(
     if page == 1:
         return exhaustive_topk(index, queries, scoring.BM25, k=k)
     # walk pages via the cursor — each step filters strictly-after
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
         return spark.createDataFrame([], empty)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-    rows = [
-        (q, t, c, df_by_term[t]) for q, t, c in qt_rows if t in df_by_term
-    ]
-    if not rows:
-        return spark.createDataFrame([], empty)
-    qt = spark.createDataFrame(
-        rows, "qid string, term string, qtf int, df long"
-    )
+    qt = got[1]
     s = scoring.bm25_col(
         F.col("tf"), F.col("doc_len"), F.col("df"), index.n_docs, index.avgdl
     )
@@ -232,7 +186,7 @@ def search_after_topk(
             ]
             if not live:  # every query exhausted — stop walking
                 return spark.createDataFrame([], empty)
-            cur = spark.createDataFrame(live, "qid string, cs double, cd long")
+            cur = local_frame(spark, live, "qid string, cs double, cd long")
             after = scored.join(F.broadcast(cur), "qid").where(
                 (F.col("score") < F.col("cs"))
                 | ((F.col("score") == F.col("cs")) & (F.col("docid") > F.col("cd")))

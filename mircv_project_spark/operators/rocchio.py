@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from . import scoring
 from .index_build import InvertedIndex
-from .topk import exhaustive_topk, query_terms
+from .topk import exhaustive_topk, query_terms, resolve_query_terms
 
 ROCCHIO_FB_DOCS = 10
 ROCCHIO_FB_TERMS = 5
@@ -61,22 +61,11 @@ def rocchio_topk(
     fb_terms: int = ROCCHIO_FB_TERMS,
 ) -> DataFrame:
     """-> DataFrame(qid string, docno string, rank long, score double)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
     empty = "qid string, docno string, rank long, score double"
-    if not qt_rows:
-        return spark.createDataFrame([], empty)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: r["df"] for r in lex}
-    orig_rows = [(q, t, c) for q, t, c in qt_rows if t in df_by_term]
-    if not orig_rows:
-        return spark.createDataFrame([], empty)
-    orig = spark.createDataFrame(orig_rows, "qid string, term string, qtf int")
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], empty)
+    orig = got[1].select("qid", "term", "qtf")
 
     first = exhaustive_topk(index, queries, scoring.BM25, k=fb_docs)
     fb = first.select("qid", (F.col("docno").cast("long") + 1).alias("docid"))

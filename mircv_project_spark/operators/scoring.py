@@ -44,6 +44,16 @@ def tfidf_col(tf: Column, df: Column, n_docs) -> Column:
     return (F.lit(1.0) + F.log10(tf)) * idf_col(df, n_docs)
 
 
+def score_col(standard: str, tf: Column, dl: Column, df: Column, n_docs, avgdl) -> Column:
+    """bm25_col or tfidf_col by standard name (the Column twin of
+    maxscore.score_np); raises on an unknown standard."""
+    if standard == BM25:
+        return bm25_col(tf, dl, df, n_docs, avgdl)
+    if standard == TFIDF:
+        return tfidf_col(tf, df, n_docs)
+    raise ValueError(f"unknown standard {standard!r}")
+
+
 def bm25_coeff_col(tf: Column, dl: Column, avgdl) -> Column:
     """df-independent part of BM25: score = coeff * idf. Used to fold the
     term-upper-bound computation (Scorer.java:52-72) into the posting

@@ -22,14 +22,23 @@ Reference query semantics replicated exactly:
 
 Scores are rounded to 6 decimals for cross-engine comparison; ranking
 uses the rounded score so rank and value agree across engines.
+
+Every distributed scorer looks its query terms up through
+``resolve_query_terms``: one bucket/term-pruned lexicon collect, OOV
+terms dropped, and the surviving rows broadcast as an Arrow local
+relation (``session.local_frame``) that no Python worker touches.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokenize
+from ..session import local_frame
+from ..sources.index_store import prune_terms
 from . import scoring
 from .index_build import InvertedIndex
 
@@ -48,18 +57,42 @@ def query_terms(queries: list[tuple[str, str]], parse: bool) -> list[tuple[str, 
 
 
 _EMPTY_SCHEMA = "qid string, docno string, rank long, score double"
+_QT_DDL = "qid string, term string, qtf int, df long"
+_STAT_TYPES = {"df": "long", "cf": "long", "bm25_ub": "double", "tfidf_ub": "double"}
 
 
-def _resolve_query_terms(spark, qt_rows, df_by_term):
-    """Attach df, drop missing terms, compute conjunctive requirements."""
-    qt_rows = [(q, t, c, df_by_term[t]) for q, t, c in qt_rows if t in df_by_term]
+def resolve_query_terms(src, qt_rows, stats=("df",)):
+    """The lexicon lookup of a query batch (``model/Lexicon.java:154-195``).
+
+    ``src`` is an InvertedIndex or an IndexReader; ``qt_rows`` are
+    ``(qid, term, qtf)`` rows (``query_terms``, or a caller's expanded
+    or reweighted terms).  The lexicon is pruned like
+    ``IndexReader._prune`` (bucket, then ``term IN``) and collected once
+    for the ``stats`` columns.  Terms missing from it drop silently
+    (``QueryProcessorMain.java:139-154``).
+
+    -> None when ``qt_rows`` is empty (no Spark job) or no term is in the
+    lexicon; else ``(rows, qt)``: the in-lexicon ``(qid, term, qtf,
+    *stats)`` rows, multiplicity preserved, and ``qt``, their frame as
+    an Arrow local relation (``session.local_frame``) for broadcasting.
+    """
     if not qt_rows:
-        return None, None
-    n_required: dict[str, int] = {}
-    for q, _, _, _ in qt_rows:
-        n_required[q] = n_required.get(q, 0) + 1
-    qt = spark.createDataFrame(qt_rows, "qid string, term string, qtf int, df long")
-    return qt, n_required
+        return None
+    terms = sorted({t for _, t, _ in qt_rows})
+    lex = prune_terms(src.lexicon, terms, src.term_buckets)
+    found = {r[0]: tuple(r[1:]) for r in lex.select("term", *stats).collect()}
+    rows = [(q, t, c, *found[t]) for q, t, c in qt_rows if t in found]
+    if not rows:
+        return None
+    ddl = ", ".join(["qid string, term string, qtf int"]
+                    + [f"{c} {_STAT_TYPES[c]}" for c in stats])
+    return rows, local_frame(src.lexicon.sparkSession, rows, ddl)
+
+
+def n_terms(rows) -> Counter:
+    """qid -> its number of in-lexicon terms (the conjunctive
+    requirement) over ``resolve_query_terms`` rows."""
+    return Counter(r[0] for r in rows)
 
 
 def _score_and_rank(
@@ -73,15 +106,9 @@ def _score_and_rank(
 ) -> DataFrame:
     """(qid, qtf, df, docid, tf, doc_len) rows -> top-k result frame.
     Shared by the flat (pre-compression) and block-store query paths."""
-    if standard == scoring.BM25:
-        s = scoring.bm25_col(
-            F.col("tf"), F.col("doc_len"), F.col("df"), n_docs, avgdl
-        )
-    elif standard == scoring.TFIDF:
-        s = scoring.tfidf_col(F.col("tf"), F.col("df"), n_docs)
-    else:
-        raise ValueError(f"unknown standard {standard!r}")
-
+    s = scoring.score_col(
+        standard, F.col("tf"), F.col("doc_len"), F.col("df"), n_docs, avgdl
+    )
     scored = (
         matched.withColumn("contrib", F.col("qtf") * s)
         .groupBy("qid", "docid")
@@ -115,30 +142,13 @@ def exhaustive_topk(
     conjunctive: bool = False,
 ) -> DataFrame:
     """-> DataFrame(qid string, docno string, rank long, score double)."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    # resolve df for each query term driver-side (tiny) from the lexicon
-    # (never a re-aggregation of the full postings: the lexicon is the
-    # bucket-pruned term-level table, exactly like the reference's
-    # lexicon.dat lookup — model/Lexicon.java:154-195)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    qt, n_required = _resolve_query_terms(
-        spark, qt_rows, {r["term"]: r["df"] for r in lex}
-    )
-    if qt is None:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    rows, qt = got
     matched = index.flat.join(F.broadcast(qt), "term")
     return _score_and_rank(
-        matched, standard, index.n_docs, index.avgdl, k, conjunctive, n_required
+        matched, standard, index.n_docs, index.avgdl, k, conjunctive, n_terms(rows)
     )
 
 
@@ -164,36 +174,17 @@ def explain_topdoc(
     the broadcast query table) plus one rank-1 window and one self-join
     of the per-term rows against the winners — no new shuffles beyond
     the scorer's."""
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
     empty = (
         "qid string, docno string, term string, tf long, doc_len long,"
         " df long, contrib double, total double"
     )
-    if not qt_rows:
-        return spark.createDataFrame([], empty)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], empty)
+    s = scoring.score_col(
+        standard, F.col("tf"), F.col("doc_len"), F.col("df"), index.n_docs, index.avgdl
     )
-    qt, _ = _resolve_query_terms(
-        spark, qt_rows, {r["term"]: r["df"] for r in lex}
-    )
-    if qt is None:
-        return spark.createDataFrame([], empty)
-
-    if standard == scoring.BM25:
-        s = scoring.bm25_col(
-            F.col("tf"), F.col("doc_len"), F.col("df"), index.n_docs, index.avgdl
-        )
-    elif standard == scoring.TFIDF:
-        s = scoring.tfidf_col(F.col("tf"), F.col("df"), index.n_docs)
-    else:
-        raise ValueError(f"unknown standard {standard!r}")
-
-    per = index.flat.join(F.broadcast(qt), "term").withColumn(
+    per = index.flat.join(F.broadcast(got[1]), "term").withColumn(
         "raw", F.col("qtf") * s
     )
     scored = per.groupBy("qid", "docid").agg(F.sum("raw").alias("raw_score"))
@@ -235,53 +226,16 @@ def topk_from_blocks(
     query-term table -> same shared scoring/agg/rank tail as the flat
     path.  Rank-identical to exhaustive_topk and MaxScore; exercised
     against the same DuckDB oracle (bm25_topk_compressed)."""
-    import pandas as pd
-
-    from ..functions import codecs as C
-
-    spark = reader.postings.sparkSession
-    qt_rows = query_terms(queries, reader.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    terms = sorted({t for _, t, _ in qt_rows})
-
-    lex = reader._prune(reader.lexicon, terms).select("term", "df").collect()
-    qt, n_required = _resolve_query_terms(
-        spark, qt_rows, {r["term"]: r["df"] for r in lex}
-    )
-    if qt is None:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    blocks = reader._prune(reader.postings, terms).select(
+    got = resolve_query_terms(reader, query_terms(queries, reader.parse))
+    if got is None:
+        return reader.postings.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    rows, qt = got
+    blocks = reader._prune(reader.postings, sorted({t for _, t, *_ in rows})).select(
         "term", F.explode("blocks").alias("b")
     )
-    codec = reader.codec
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for term, b in zip(pdf["term"], pdf["b"]):
-                ids, tfs, dls = C.decode_block(b, codec=codec)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "term": term,
-                            "docid": ids.astype("int64"),
-                            "tf": tfs.astype("int32"),
-                            "doc_len": dls.astype("int32"),
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
-
-    flat = blocks.mapInPandas(
-        decode, "term string, docid long, tf int, doc_len int"
-    )
-    matched = flat.join(F.broadcast(qt), "term")
+    matched = _decode_blocks_df(blocks, reader.codec).join(F.broadcast(qt), "term")
     return _score_and_rank(
-        matched, standard, reader.n_docs, reader.avgdl, k, conjunctive, n_required
+        matched, standard, reader.n_docs, reader.avgdl, k, conjunctive, n_terms(rows)
     )
 
 
@@ -342,9 +296,10 @@ def topk_from_shards(
             df_by_term[row["term"]] = (
                 df_by_term.get(row["term"], 0) + int(row["df"])
             )
-    qt, n_required = _resolve_query_terms(spark, qt_rows, df_by_term)
-    if qt is None:
+    rows = [(q, t, c, df_by_term[t]) for q, t, c in qt_rows if t in df_by_term]
+    if not rows:
         return spark.createDataFrame([], _EMPTY_SCHEMA)
+    qt = local_frame(spark, rows, _QT_DDL)
 
     flats = [
         _decode_blocks_df(
@@ -358,7 +313,7 @@ def topk_from_shards(
     flat = reduce(lambda a, b: a.unionByName(b), flats)
     matched = flat.join(F.broadcast(qt), "term")
     return _score_and_rank(
-        matched, standard, n_docs, avgdl, k, conjunctive, n_required
+        matched, standard, n_docs, avgdl, k, conjunctive, n_terms(rows)
     )
 
 
@@ -403,11 +358,9 @@ def _block_ub_col(standard: str, n_docs: int, avgdl: float):
     the same expressions (and op order) as the real scorer, evaluated at
     the block-max point: the BM25 coefficient is increasing in tf and
     decreasing in dl, so score(max_tf, min_dl) bounds every posting."""
-    if standard == scoring.BM25:
-        return scoring.bm25_col(
-            F.col("max_tf"), F.col("min_dl"), F.col("df"), n_docs, avgdl
-        )
-    return scoring.tfidf_col(F.col("max_tf"), F.col("df"), n_docs)
+    return scoring.score_col(
+        standard, F.col("max_tf"), F.col("min_dl"), F.col("df"), n_docs, avgdl
+    )
 
 
 def _block_meta_df(reader, terms: list[str], dfs: dict[str, int], standard: str):
@@ -415,9 +368,8 @@ def _block_meta_df(reader, terms: list[str], dfs: dict[str, int], standard: str)
     the given terms — metadata ONLY: the payload binaries are projected
     away before any window/shuffle, and nested-schema pruning keeps them
     out of the parquet read entirely (asserted in tests/test_plans.py)."""
-    spark = reader.postings.sparkSession
-    dfmap = spark.createDataFrame(
-        [(t, dfs[t]) for t in terms], "term string, df long"
+    dfmap = local_frame(
+        reader.postings.sparkSession, [(t, dfs[t]) for t in terms], "term string, df long"
     )
     # DIRECT field references (col("blocks.n") -> array<int>) are what
     # nested-schema pruning understands: a posexplode of the full block
@@ -499,270 +451,272 @@ def topk_from_blocks_pruned(
     few thousand candidates from the selective terms — including when
     the stopword is the query's own top-UB term (head-term queries),
     which previously decoded in full for theta.
+
+    The final ranking (at most k rows per query) is collected here and
+    returned as a ``local_frame``, the driver route's result shape, so
+    the frames the passes persist (the theta block selection, its
+    decoded rows and the essential matches) are released before return.
     """
     spark = reader.postings.sparkSession
     collect_metrics = metrics is not None  # extra count jobs only on request
     metrics = metrics if metrics is not None else {}
-    qt_rows = query_terms(queries, reader.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    terms = sorted({t for _, t, _ in qt_rows})
-
     ub_col = "bm25_ub" if standard == scoring.BM25 else "tfidf_ub"
-    lex = {
-        r["term"]: (r["df"], r[ub_col])
-        for r in reader._prune(reader.lexicon, terms)
-        .select("term", "df", ub_col)
-        .collect()
-    }
-    qt_rows = [(q, t, c, lex[t][0]) for q, t, c in qt_rows if t in lex]
-    if not qt_rows:
+    got = resolve_query_terms(
+        reader, query_terms(queries, reader.parse), stats=("df", ub_col)
+    )
+    if got is None:
         return spark.createDataFrame([], _EMPTY_SCHEMA)
+    rows, _ = got
+    lex = {t: (df, ub) for _, t, _, df, ub in rows}
 
     # per-query term list with contribution upper bounds (qtf * term UB)
     by_qid: dict[str, list[tuple[str, int, int, float]]] = {}
-    for q, t, c, df in qt_rows:
-        by_qid.setdefault(q, []).append((t, c, df, c * lex[t][1]))
+    for q, t, c, df, ub in rows:
+        by_qid.setdefault(q, []).append((t, c, df, c * ub))
 
-    if conjunctive:
-        # rarest term per query is the (complete) candidate source; a
-        # theta lower bound from single-term contributions would NOT be
-        # rank-safe here (the k-th conjunctive score can sit below it),
-        # and isn't needed — intersection is the prune.
-        ess_pairs, ne_pairs = [], []
-        for q, lst in by_qid.items():
-            for i, (t, c, df, _) in enumerate(
-                sorted(lst, key=lambda x: (x[2], x[0]))
-            ):
-                (ess_pairs if i == 0 else ne_pairs).append((q, t, c, df))
-        t1_terms: list[str] = []
-        rows1 = None
-    else:
-        # --- pass 1: block-max-guided theta bootstrap ---
-        # theta only needs to LOWER-bound the final k-th score, and any
-        # subset of the top-UB term's postings yields a valid bound — so
-        # instead of decoding t1's ENTIRE list (the dominant cost when
-        # the top-UB term is a head term), rank its blocks by their
-        # per-block score bound (metadata only: score(max_tf, min_dl) is
-        # an upper bound for any posting in the block) and decode just
-        # enough top blocks to cover ~theta_target postings.  A weaker
-        # theta can only cost extra decode downstream, never rank
-        # correctness — every later prune re-checks against theta.
-        t1_pairs = {
-            (q, max(lst, key=lambda x: x[3])[0]) for q, lst in by_qid.items()
-        }
-        t1_terms = sorted({t for _, t in t1_pairs})
-        theta_target = max(4 * k, 256)
-        wsel = Window.partitionBy("term").orderBy(
-            F.col("bub").desc(), F.col("run").asc(), F.col("bi").asc()
-        )
-        # the block selection stays a DataFrame (persisted, metadata-
-        # sized) instead of a collect + re-createDataFrame round trip:
-        # the theta job below computes it as a broadcast subquery, so
-        # pass 1 costs ONE job submission instead of two (round-6; the
-        # selection is reused for the eager/decoded-key anti-joins)
-        sel_df = (
-            _block_meta_df(reader, t1_terms, {t: lex[t][0] for t in t1_terms}, standard)
-            .withColumn("cum", F.sum("bn").over(wsel))
-            .where(F.col("cum") - F.col("bn") < theta_target)
-            .select("term", "run", "bi")
-            .persist()
-        )
-        rows1 = _decode_blocks_df(
-            reader._prune(reader.postings, t1_terms)
-            .select("term", "run", F.posexplode("blocks").alias("bi", "b"))
-            .join(F.broadcast(sel_df), ["term", "run", "bi"])
-            .select("term", "b"),
-            reader.codec,
-        ).persist()
-        qt1 = spark.createDataFrame(
-            [(q, t, c, df) for q, lst in by_qid.items() for t, c, df, _ in lst
-             if (q, t) in t1_pairs],
-            "qid string, term string, qtf int, df long",
-        )
-        s1 = scoring.bm25_col(
-            F.col("tf"), F.col("doc_len"), F.col("df"), reader.n_docs, reader.avgdl
-        ) if standard == scoring.BM25 else scoring.tfidf_col(F.col("tf"), F.col("df"), reader.n_docs)
-        w = Window.partitionBy("qid").orderBy(F.col("contrib").desc())
-        kth = (
-            rows1.join(F.broadcast(qt1), "term")
-            .select("qid", (F.col("qtf") * s1).alias("contrib"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == k)
-            .select("qid", F.round("contrib", ROUND_DECIMALS).alias("theta"))
-            .collect()
-        )
-        theta = {r["qid"]: r["theta"] for r in kth}  # absent -> <k docs -> 0
-
-        # --- pass 2: essential split + candidates ---
-        ess_pairs, ne_pairs = [], []
-        for q, lst in by_qid.items():
-            th = theta.get(q, 0.0)
-            lst_sorted = sorted(lst, key=lambda x: -x[3])  # ub desc
-            acc = 0.0
-            cut = len(lst_sorted)  # first index (from the end) kept essential
-            for i in range(len(lst_sorted) - 1, 0, -1):  # t1 (index 0) always essential
-                acc += lst_sorted[i][3]
-                if acc < th - _PRUNE_EPS:
-                    cut = i
-                else:
-                    break
-            for i, (t, c, df, _) in enumerate(lst_sorted):
-                (ess_pairs if i < cut else ne_pairs).append((q, t, c, df))
-
-    ess_terms = sorted({t for _, t, _, _ in ess_pairs})
-    qt_e = spark.createDataFrame(ess_pairs, "qid string, term string, qtf int, df long")
-
-    # per-essential-term hot cut (disjunctive only): a block of
-    # essential term t can SOURCE a top-k candidate only if
-    #   qtf*block_ub + sum(other terms' qtf*global_UB) >= theta - eps;
-    # colder blocks cannot hold a doc that both reaches theta and is
-    # invisible to every other essential term's hot blocks, so they
-    # defer to candidate-driven lookups exactly like non-essential
-    # blocks.  Only a query's top-UB term can have a positive cut (for
-    # any other term the "others" sum already contains that top UB,
-    # which is >= theta by construction) — so this prunes exactly the
-    # HEAD-term lists, which is where the decode cost lives at scale.
-    hot_cut: dict[str, float] = {}
-    if not conjunctive:
-        totals = {q: sum(x[3] for x in lst) for q, lst in by_qid.items()}
-        for q, t, c, _df in ess_pairs:
-            own = c * lex[t][1]
-            cq = (theta.get(q, 0.0) - _PRUNE_EPS - (totals[q] - own)) / c
-            hot_cut[t] = min(hot_cut.get(t, float("inf")), cq)
-    partial_terms = sorted(t for t, v in hot_cut.items() if v > 0)
-
-    # eager essential decode: every block EXCEPT partial terms' cold
-    # blocks and the already-decoded theta selection
-    eager = reader._prune(reader.postings, ess_terms).select(
-        "term", "run", F.posexplode("blocks").alias("bi", "b")
-    )
-    if partial_terms:
-        cut_df = spark.createDataFrame(
-            [(t, hot_cut[t]) for t in partial_terms], "term string, cut double"
-        )
-        dfmap_e = spark.createDataFrame(
-            [(t, lex[t][0]) for t in ess_terms], "term string, df long"
-        )
-        eager = (
-            eager.join(F.broadcast(dfmap_e), "term")
-            .join(F.broadcast(cut_df), "term", "left")
-            .withColumn("max_tf", F.col("b.max_tf"))
-            .withColumn("min_dl", F.col("b.min_dl"))
-            .where(
-                F.col("cut").isNull()
-                | (_block_ub_col(standard, reader.n_docs, reader.avgdl)
-                   >= F.col("cut"))
+    sel_df = rows1 = matched_e = None  # persisted below, released in the finally
+    try:
+        if conjunctive:
+            # rarest term per query is the (complete) candidate source; a
+            # theta lower bound from single-term contributions would NOT be
+            # rank-safe here (the k-th conjunctive score can sit below it),
+            # and isn't needed — intersection is the prune.
+            ess_pairs, ne_pairs = [], []
+            for q, lst in by_qid.items():
+                for i, (t, c, df, _) in enumerate(
+                    sorted(lst, key=lambda x: (x[2], x[0]))
+                ):
+                    (ess_pairs if i == 0 else ne_pairs).append((q, t, c, df))
+        else:
+            # --- pass 1: block-max-guided theta bootstrap ---
+            # theta only needs to LOWER-bound the final k-th score, and any
+            # subset of the top-UB term's postings yields a valid bound — so
+            # instead of decoding t1's ENTIRE list (the dominant cost when
+            # the top-UB term is a head term), rank its blocks by their
+            # per-block score bound (metadata only: score(max_tf, min_dl) is
+            # an upper bound for any posting in the block) and decode just
+            # enough top blocks to cover ~theta_target postings.  A weaker
+            # theta can only cost extra decode downstream, never rank
+            # correctness — every later prune re-checks against theta.
+            t1_pairs = {
+                (q, max(lst, key=lambda x: x[3])[0]) for q, lst in by_qid.items()
+            }
+            t1_terms = sorted({t for _, t in t1_pairs})
+            theta_target = max(4 * k, 256)
+            wsel = Window.partitionBy("term").orderBy(
+                F.col("bub").desc(), F.col("run").asc(), F.col("bi").asc()
             )
-            .select("term", "run", "bi", "b")
-        )
-        if collect_metrics:
-            metrics["ess_blocks_total"] = (
-                reader._prune(reader.postings, ess_terms)
-                .select(F.explode("blocks"))
-                .count()
+            # the block selection stays a DataFrame (persisted, metadata-
+            # sized) instead of a collect + re-createDataFrame round trip:
+            # the theta job below computes it as a broadcast subquery, so
+            # pass 1 costs ONE job submission instead of two (round-6; the
+            # selection is reused for the eager/decoded-key anti-joins)
+            sel_df = (
+                _block_meta_df(reader, t1_terms, {t: lex[t][0] for t in t1_terms}, standard)
+                .withColumn("cum", F.sum("bn").over(wsel))
+                .where(F.col("cum") - F.col("bn") < theta_target)
+                .select("term", "run", "bi")
+                .persist()
             )
-            metrics["ess_blocks_eager"] = eager.count()
-    if rows1 is not None:
-        eager = eager.join(F.broadcast(sel_df), ["term", "run", "bi"], "left_anti")
-    rows_new = _decode_blocks_df(eager.select("term", "b"), reader.codec)
-    rows_e = rows1.unionByName(rows_new) if rows1 is not None else rows_new
-    matched_e = rows_e.join(F.broadcast(qt_e), "term").persist()
-    matched = matched_e
-    candidates = matched_e.select("qid", "docid").distinct()
+            rows1 = _decode_blocks_df(
+                reader._prune(reader.postings, t1_terms)
+                .select("term", "run", F.posexplode("blocks").alias("bi", "b"))
+                .join(F.broadcast(sel_df), ["term", "run", "bi"])
+                .select("term", "b"),
+                reader.codec,
+            ).persist()
+            qt1 = local_frame(
+                spark,
+                [(q, t, c, df) for q, lst in by_qid.items() for t, c, df, _ in lst
+                 if (q, t) in t1_pairs],
+                _QT_DDL,
+            )
+            s1 = scoring.score_col(
+                standard, F.col("tf"), F.col("doc_len"), F.col("df"),
+                reader.n_docs, reader.avgdl,
+            )
+            w = Window.partitionBy("qid").orderBy(F.col("contrib").desc())
+            kth = (
+                rows1.join(F.broadcast(qt1), "term")
+                .select("qid", (F.col("qtf") * s1).alias("contrib"))
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == k)
+                .select("qid", F.round("contrib", ROUND_DECIMALS).alias("theta"))
+                .collect()
+            )
+            theta = {r["qid"]: r["theta"] for r in kth}  # absent -> <k docs -> 0
 
-    def _candidate_lookup(pairs, exclude_keys=None, metric_prefix=None):
-        """Candidate-driven block lookups for (qid, term) pairs whose
-        contributions aren't (fully) in matched_e: the needed block
-        INDEX per (candidate docid, run) comes from the run's block-max
-        array via a pure Catalyst size(filter(maxes, m < docid))
-        searchsorted — blocks whose docid range holds no candidate are
-        NEVER decoded.  ``exclude_keys`` drops blocks already decoded
-        eagerly (their rows are counted through matched_e)."""
-        lterms = sorted({t for _, t, _, _ in pairs})
-        lqt = spark.createDataFrame(
-            pairs, "qid string, term string, qtf int, df long"
+            # --- pass 2: essential split + candidates ---
+            ess_pairs, ne_pairs = [], []
+            for q, lst in by_qid.items():
+                th = theta.get(q, 0.0)
+                lst_sorted = sorted(lst, key=lambda x: -x[3])  # ub desc
+                acc = 0.0
+                cut = len(lst_sorted)  # first index (from the end) kept essential
+                for i in range(len(lst_sorted) - 1, 0, -1):  # t1 (index 0) always essential
+                    acc += lst_sorted[i][3]
+                    if acc < th - _PRUNE_EPS:
+                        cut = i
+                    else:
+                        break
+                for i, (t, c, df, _) in enumerate(lst_sorted):
+                    (ess_pairs if i < cut else ne_pairs).append((q, t, c, df))
+
+        ess_terms = sorted({t for _, t, _, _ in ess_pairs})
+        qt_e = local_frame(spark, ess_pairs, _QT_DDL)
+
+        # per-essential-term hot cut (disjunctive only): a block of
+        # essential term t can SOURCE a top-k candidate only if
+        #   qtf*block_ub + sum(other terms' qtf*global_UB) >= theta - eps;
+        # colder blocks cannot hold a doc that both reaches theta and is
+        # invisible to every other essential term's hot blocks, so they
+        # defer to candidate-driven lookups exactly like non-essential
+        # blocks.  Only a query's top-UB term can have a positive cut (for
+        # any other term the "others" sum already contains that top UB,
+        # which is >= theta by construction) — so this prunes exactly the
+        # HEAD-term lists, which is where the decode cost lives at scale.
+        hot_cut: dict[str, float] = {}
+        if not conjunctive:
+            totals = {q: sum(x[3] for x in lst) for q, lst in by_qid.items()}
+            for q, t, c, _df in ess_pairs:
+                own = c * lex[t][1]
+                cq = (theta.get(q, 0.0) - _PRUNE_EPS - (totals[q] - own)) / c
+                hot_cut[t] = min(hot_cut.get(t, float("inf")), cq)
+        partial_terms = sorted(t for t, v in hot_cut.items() if v > 0)
+
+        # eager essential decode: every block EXCEPT partial terms' cold
+        # blocks and the already-decoded theta selection
+        eager = reader._prune(reader.postings, ess_terms).select(
+            "term", "run", F.posexplode("blocks").alias("bi", "b")
         )
-        want = (
-            candidates.join(F.broadcast(lqt.select("qid", "term")), "qid")
-            .select("term", "docid")
-            .distinct()
-        )
-        run_meta = reader._prune(reader.postings, lterms).select(
-            "term",
-            "run",
-            # direct field ref (NOT a transform lambda): prunes the scan
-            # to struct<max_doc_id> — payload binaries never read here
-            F.col("blocks.max_doc_id").alias("maxes"),
-        )
-        needed = (
-            want.join(run_meta, "term")
-            .select(
+        if partial_terms:
+            cut_df = local_frame(
+                spark, [(t, hot_cut[t]) for t in partial_terms], "term string, cut double"
+            )
+            dfmap_e = local_frame(
+                spark, [(t, lex[t][0]) for t in ess_terms], "term string, df long"
+            )
+            eager = (
+                eager.join(F.broadcast(dfmap_e), "term")
+                .join(F.broadcast(cut_df), "term", "left")
+                .withColumn("max_tf", F.col("b.max_tf"))
+                .withColumn("min_dl", F.col("b.min_dl"))
+                .where(
+                    F.col("cut").isNull()
+                    | (_block_ub_col(standard, reader.n_docs, reader.avgdl)
+                       >= F.col("cut"))
+                )
+                .select("term", "run", "bi", "b")
+            )
+            if collect_metrics:
+                metrics["ess_blocks_total"] = (
+                    reader._prune(reader.postings, ess_terms)
+                    .select(F.explode("blocks"))
+                    .count()
+                )
+                metrics["ess_blocks_eager"] = eager.count()
+        if rows1 is not None:
+            eager = eager.join(F.broadcast(sel_df), ["term", "run", "bi"], "left_anti")
+        rows_new = _decode_blocks_df(eager.select("term", "b"), reader.codec)
+        rows_e = rows1.unionByName(rows_new) if rows1 is not None else rows_new
+        matched_e = rows_e.join(F.broadcast(qt_e), "term").persist()
+        matched = matched_e
+        candidates = matched_e.select("qid", "docid").distinct()
+
+        def _candidate_lookup(pairs, exclude_keys=None, metric_prefix=None):
+            """Candidate-driven block lookups for (qid, term) pairs whose
+            contributions aren't (fully) in matched_e: the needed block
+            INDEX per (candidate docid, run) comes from the run's block-max
+            array via a pure Catalyst size(filter(maxes, m < docid))
+            searchsorted — blocks whose docid range holds no candidate are
+            NEVER decoded.  ``exclude_keys`` drops blocks already decoded
+            eagerly (their rows are counted through matched_e)."""
+            lterms = sorted({t for _, t, _, _ in pairs})
+            lqt = local_frame(spark, pairs, _QT_DDL)
+            want = (
+                candidates.join(F.broadcast(lqt.select("qid", "term")), "qid")
+                .select("term", "docid")
+                .distinct()
+            )
+            run_meta = reader._prune(reader.postings, lterms).select(
                 "term",
                 "run",
-                F.size(F.filter("maxes", lambda m: m < F.col("docid"))).alias("bi"),
-                F.size("maxes").alias("nb"),
+                # direct field ref (NOT a transform lambda): prunes the scan
+                # to struct<max_doc_id> — payload binaries never read here
+                F.col("blocks.max_doc_id").alias("maxes"),
             )
-            .where(F.col("bi") < F.col("nb"))
-            .select("term", "run", "bi")
-            .distinct()
-        )
-        if exclude_keys is not None:
-            needed = needed.join(
-                F.broadcast(exclude_keys), ["term", "run", "bi"], "left_anti"
+            needed = (
+                want.join(run_meta, "term")
+                .select(
+                    "term",
+                    "run",
+                    F.size(F.filter("maxes", lambda m: m < F.col("docid"))).alias("bi"),
+                    F.size("maxes").alias("nb"),
+                )
+                .where(F.col("bi") < F.col("nb"))
+                .select("term", "run", "bi")
+                .distinct()
             )
-        blocks_l = (
-            reader._prune(reader.postings, lterms)
-            .select("term", "run", F.posexplode("blocks").alias("bi", "b"))
-            .join(needed, ["term", "run", "bi"])
-            .select("term", "b")
-        )
-        if collect_metrics and metric_prefix:
-            metrics[f"{metric_prefix}_blocks_total"] = (
+            if exclude_keys is not None:
+                needed = needed.join(
+                    F.broadcast(exclude_keys), ["term", "run", "bi"], "left_anti"
+                )
+            blocks_l = (
                 reader._prune(reader.postings, lterms)
-                .select(F.explode("blocks"))
-                .count()
+                .select("term", "run", F.posexplode("blocks").alias("bi", "b"))
+                .join(needed, ["term", "run", "bi"])
+                .select("term", "b")
             )
-            metrics[f"{metric_prefix}_blocks_decoded"] = needed.count()
-        rows_l = _decode_blocks_df(blocks_l, reader.codec)
-        return rows_l.join(F.broadcast(lqt), "term").join(
-            candidates, ["qid", "docid"], "left_semi"
-        )
-
-    # partial terms owe their COLD blocks' contributions to candidate
-    # docs (the eager/hot rows are already in matched_e for these same
-    # (qid, term) pairs, so decoded blocks are excluded)
-    b_pairs = [(q, t, c, df) for q, t, c, df in ess_pairs if t in partial_terms]
-    decoded_keys = None
-    if b_pairs:
-        decoded_keys = eager.select("term", "run", "bi")
-        if rows1 is not None:
-            decoded_keys = decoded_keys.unionByName(sel_df)
-    # NOTE (round-6): merging the two lookup classes into one call was
-    # tried and REVERTED — the decoded-key exclusion is term-global
-    # while the "already counted" argument is per (qid, term): any term
-    # that is essential for one query and non-essential for another
-    # (the common case on a shared vocabulary) loses the second query's
-    # contributions from its eagerly-decoded blocks.  The split calls
-    # are the correct shape.
-    if ne_pairs:
-        matched = matched.unionByName(
-            _candidate_lookup(ne_pairs, metric_prefix="ne")
-        )
-    if b_pairs:
-        matched = matched.unionByName(
-            _candidate_lookup(
-                b_pairs, exclude_keys=decoded_keys, metric_prefix="cold"
+            if collect_metrics and metric_prefix:
+                metrics[f"{metric_prefix}_blocks_total"] = (
+                    reader._prune(reader.postings, lterms)
+                    .select(F.explode("blocks"))
+                    .count()
+                )
+                metrics[f"{metric_prefix}_blocks_decoded"] = needed.count()
+            rows_l = _decode_blocks_df(blocks_l, reader.codec)
+            return rows_l.join(F.broadcast(lqt), "term").join(
+                candidates, ["qid", "docid"], "left_semi"
             )
-        )
-    metrics["essential_terms"] = len(ess_terms)
-    metrics["non_essential_pairs"] = len(ne_pairs)
-    metrics["partial_terms"] = len(partial_terms)
 
-    n_req = {q: len(lst) for q, lst in by_qid.items()}
-    return _score_and_rank(
-        matched, standard, reader.n_docs, reader.avgdl, k, conjunctive, n_req
-    )
+        # partial terms owe their COLD blocks' contributions to candidate
+        # docs (the eager/hot rows are already in matched_e for these same
+        # (qid, term) pairs, so decoded blocks are excluded)
+        b_pairs = [(q, t, c, df) for q, t, c, df in ess_pairs if t in partial_terms]
+        decoded_keys = None
+        if b_pairs:
+            decoded_keys = eager.select("term", "run", "bi")
+            if rows1 is not None:
+                decoded_keys = decoded_keys.unionByName(sel_df)
+        # NOTE (round-6): merging the two lookup classes into one call was
+        # tried and REVERTED — the decoded-key exclusion is term-global
+        # while the "already counted" argument is per (qid, term): any term
+        # that is essential for one query and non-essential for another
+        # (the common case on a shared vocabulary) loses the second query's
+        # contributions from its eagerly-decoded blocks.  The split calls
+        # are the correct shape.
+        if ne_pairs:
+            matched = matched.unionByName(
+                _candidate_lookup(ne_pairs, metric_prefix="ne")
+            )
+        if b_pairs:
+            matched = matched.unionByName(
+                _candidate_lookup(
+                    b_pairs, exclude_keys=decoded_keys, metric_prefix="cold"
+                )
+            )
+        metrics["essential_terms"] = len(ess_terms)
+        metrics["non_essential_pairs"] = len(ne_pairs)
+        metrics["partial_terms"] = len(partial_terms)
+
+        ranked = _score_and_rank(
+            matched, standard, reader.n_docs, reader.avgdl, k, conjunctive, n_terms(rows)
+        ).collect()
+    finally:
+        for cached in (sel_df, rows1, matched_e):
+            if cached is not None:
+                cached.unpersist()
+    return local_frame(spark, ranked, _EMPTY_SCHEMA)
 
 
 def filtered_topk(
@@ -796,27 +750,15 @@ def filtered_topk(
     broadcast.  On a real deployment the attribute table is co-bucketed
     with doc_index on docid, making this a local join.
     """
-    spark = index.flat.sparkSession
-    qt_rows = query_terms(queries, index.parse)
-    if not qt_rows:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    terms = sorted({t for _, t, _ in qt_rows})
-    lex = (
-        index.lexicon.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    qt, n_required = _resolve_query_terms(
-        spark, qt_rows, {r["term"]: r["df"] for r in lex}
-    )
-    if qt is None:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
+    got = resolve_query_terms(index, query_terms(queries, index.parse))
+    if got is None:
+        return index.flat.sparkSession.createDataFrame([], _EMPTY_SCHEMA)
+    rows, qt = got
     matched = index.flat.join(F.broadcast(qt), "term").join(
         allowed.select("docid"), "docid", "left_semi"
     )
     return _score_and_rank(
-        matched, standard, index.n_docs, index.avgdl, k, conjunctive, n_required
+        matched, standard, index.n_docs, index.avgdl, k, conjunctive, n_terms(rows)
     )
 
 
@@ -878,10 +820,10 @@ def filtered_topk_scoped_stats(
             .agg(F.count("*").alias("df"))
             .collect()
         }
-        qt, _ = _resolve_query_terms(spark, qt_rows, fdf)
-        if qt is None:
+        rows = [(q, t, c, fdf[t]) for q, t, c in qt_rows if t in fdf]
+        if not rows:
             return spark.createDataFrame([], _EMPTY_SCHEMA)
-        matched = fpost.join(F.broadcast(qt), "term")
+        matched = fpost.join(F.broadcast(local_frame(spark, rows, _QT_DDL)), "term")
         out = _score_and_rank(
             matched, standard, n_f, avgdl_f, k, False, {}
         ).localCheckpoint()

@@ -7,7 +7,8 @@ import re
 import site
 
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # local, local[N], local[*], local[N,F] / local[*,F] (F = task retries).
 _LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)\s*(?:,\s*\d+)?\])?")
@@ -84,7 +85,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession tuned for this engine.
 
-    - Arrow enabled: every Python crossing is a vectorized pandas UDF.
+    - Arrow enabled: every Python crossing is a vectorized pandas UDF,
+      and driver rows become local relations (``local_frame``).
     - AQE enabled (+ skew-join handling): runtime re-planning is the
       second line of defense after our explicit head-term salting.
     - shuffle partitions default to 2x cores locally; on a real cluster
@@ -165,3 +167,23 @@ def get_spark(
     if daemon:
         builder = builder.config("spark.python.daemon.module", daemon)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver rows -> DataFrame over an Arrow local relation.
+
+    With Arrow on (``get_spark``), a pandas frame becomes a LocalRelation
+    that plans as a ``LocalTableScan``: collecting or broadcasting it runs
+    no Spark job and no Python worker.  ``createDataFrame(<python list>)``
+    instead parallelizes pickled rows (``Scan ExistingRDD``), so every job
+    over the frame, each broadcast of a query-term table included, runs
+    Python-worker tasks (~0.04 s vs ~0.32 s for a k-rows-per-query result
+    frame, measured local[32]).  ``ddl`` names and types the columns of
+    ``rows``; no rows gives an empty frame of that schema.
+    """
+    if not rows:
+        return spark.createDataFrame([], ddl)
+    import pandas as pd
+
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)

@@ -43,6 +43,13 @@ def vb_index(spark):
     return idx, IndexReader.from_memory(idx)
 
 
+def persistent_rdds(spark) -> int:
+    """RDDs marked persistent in this session, materialized or not.
+    ``_jsc`` is a pyspark-internal gateway to the JavaSparkContext, so
+    a pyspark upgrade may move it; keep every such probe here."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def cmp_rank_frames(df_a, df_b):
     """Rank-identity comparison shared by the DAAT suites."""
     a = df_a.toPandas().sort_values(["qid", "rank"], ignore_index=True)

@@ -184,9 +184,31 @@ def test_serve_topk_dispatch_routes_agree(spark, vb_index, monkeypatch):
     # Every traversal family dispatches through the one dispatcher and
     # both routes stay row-identical to the MaxScore/exhaustive result
     # (round-4 verdict ask #3: Scorer.java:85-162 is the family all
-    # four must match).
+    # four must match).  The distributed route does not depend on the
+    # family, so each family's failover is checked to make MaxScore's
+    # call (the one evaluated above) rather than evaluated again.
     import pytest as _pytest
 
+    from mircv_project_spark.operators import topk as _topk
+
+    pruned_calls = []
+
+    def counting_pruned(*args, **kw):
+        pruned_calls.append((args, kw))
+        return dist
+
+    monkeypatch.setattr(_topk, "topk_from_blocks_pruned", counting_pruned)
+    for family in ("maxscore", "wand", "taat", "bmw"):
+        pruned_calls.clear()
+        assert serve_topk(
+            reader, QUERY_SET, scoring.BM25, k=10,
+            driver_bytes_budget=0, family=family,
+        ) is dist
+        assert len(pruned_calls) == 1, (family, pruned_calls)
+        if family == "maxscore":
+            maxscore_call = pruned_calls[0]
+        assert pruned_calls[0] == maxscore_call, family
+    assert maxscore_call == ((reader, QUERY_SET, scoring.BM25, 10, False), {})
     for family in ("wand", "taat", "bmw"):
         m_f = {}
         fam_drv = serve_topk(
@@ -194,11 +216,6 @@ def test_serve_topk_dispatch_routes_agree(spark, vb_index, monkeypatch):
         )
         assert m_f["route"] == "driver" and m_f["family"] == family
         cmp_rank_frames(fam_drv, drv)
-        fam_dist = serve_topk(
-            reader, QUERY_SET, scoring.BM25, k=10,
-            driver_bytes_budget=0, family=family,
-        )
-        cmp_rank_frames(fam_dist, drv)
         # every family's conjunctive mode on the driver route matches
         # MaxScore's conjunctive frame
         m_c = {}

@@ -51,6 +51,23 @@ def test_exhaustive_topk_broadcasts_query_terms(spark, stored_index):
     checks.assert_whole_stage_codegen(df)
 
 
+def test_query_term_table_is_a_local_relation(spark, vb_index):
+    """resolve_query_terms: the query-term table the distributed scorers
+    broadcast is an Arrow local relation (LocalTableScan), not a
+    parallelized Python list (Scan ExistingRDD) whose every job runs
+    Python workers.  An OOV term drops; an all-OOV batch is None."""
+    idx, _ = vb_index
+    term = idx.lexicon.orderBy(F.col("df").desc(), "term").first()["term"]
+    oov = "\x00not-a-term\x00"
+    rows, qt = topk.resolve_query_terms(idx, [("q1", term, 2), ("q1", oov, 1)])
+    assert [r[:3] for r in rows] == [("q1", term, 2)]
+    plan = qt._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert qt.schema.simpleString() == "struct<qid:string,term:string,qtf:int,df:bigint>"
+    assert [tuple(r) for r in qt.collect()] == rows
+    assert topk.resolve_query_terms(idx, [("q2", oov, 1)]) is None
+
+
 def test_doc_index_scan_prunes_columns(spark, stored_index):
     _, out = stored_index
     reader = IndexReader.from_dir(spark, out)

@@ -13,7 +13,7 @@ from mircv_project_spark.operators.index_build import build_index, filter_indexa
 from mircv_project_spark.oracle import CONJ_QUERY_SET, QUERY_SET
 from mircv_project_spark.sources.index_store import IndexReader
 from mircv_project_spark.sources.transcripts import assign_doc_ids, load_transcripts
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, persistent_rdds
 
 
 def _cmp(df_a, df_b):
@@ -62,6 +62,21 @@ def test_pruned_conjunctive_rank_identical(spark, driver_idx):
             reader, CONJ_QUERY_SET, standard, k=10, conjunctive=True
         )
         _cmp(ex, pr)
+
+
+def test_pruned_batches_release_their_caches(spark, driver_idx):
+    """A pruned batch persists the theta block selection, its decoded
+    rows and the essential matches, and must release all of them before
+    it returns: a server that fails over to this route would otherwise
+    gain cached RDDs with every batch."""
+    _, reader = driver_idx
+    before = persistent_rdds(spark)
+    disj = topk.topk_from_blocks_pruned(reader, QUERY_SET, scoring.BM25, k=10)
+    conj = topk.topk_from_blocks_pruned(
+        reader, CONJ_QUERY_SET, scoring.BM25, k=10, conjunctive=True
+    )
+    assert persistent_rdds(spark) == before
+    assert disj.count() > 0 and conj.count() > 0
 
 
 def test_pruned_conjunctive_skips_dense_blocks(spark, skew_idx):

@@ -19,7 +19,7 @@ from mircv_project_spark.operators.index_build import (
 from mircv_project_spark.oracle import QUERY_SET
 from mircv_project_spark.sources.transcripts import assign_doc_ids, generate_transcripts
 from mircv_project_spark.streaming import incremental as S
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, persistent_rdds
 
 
 def _topk_rows(idx, queries=QUERY_SET[:4]):
@@ -84,20 +84,9 @@ def test_delta_drain_leaves_no_epoch_caches(spark, tmp_path):
     t = generate_transcripts(spark, 200, seed=13)
     t.coalesce(1).write.mode("overwrite").parquet(inp)
 
-    def n_cached():
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-    before = n_cached()
+    before = persistent_rdds(spark)
     S.index_delta_query(spark, inp, delta, ckpt, parse=False).awaitTermination(120)
-    # unpersist is non-blocking; give the async block-manager removal a
-    # moment before asserting
-    import time as _time
-
-    for _ in range(50):
-        if n_cached() <= before:
-            break
-        _time.sleep(0.1)
-    assert n_cached() <= before
+    assert persistent_rdds(spark) <= before
     # the drain's outputs are intact (both consumers saw the same rows)
     di = spark.read.parquet(f"{delta}/doc_index")
     fl = spark.read.parquet(f"{delta}/flat")
